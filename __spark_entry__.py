@@ -3641,115 +3641,11 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 }
 
 
-# R8 ROTATION (executes the guidance above, VERDICT r7 item #3): the
-# driver verifies the FIRST 50 dict entries, so reorder — red-fixed key
-# first (sql_entry), then this round's promotions/first-registrations
-# (pca_embed now value-checked; keep_by_dedup, audio_neardup,
-# scan_two_pass, scan_two_pass_ffill new), then the 50-slot balance as a
-# pure FRESHNESS window: all 20 keys whose latest official row is r3-era
-# (rollup..wmean, displaced in r7), then the alphabetical head of the r4
-# block (24 of its 48; the remaining 24 r4 keys plus the r6 block are the
-# natural R9 WINDOW, freshness-ordered the same way).
-# R9 WINDOW (executes the r8 continuation plan + VERDICT r8 item #1):
-# r8 was 50/50 green so there are no red keys; front-load the 20 keys
-# first-registered late in r8 that have NO official driver row yet (each
-# is gate-green at BOTH sf0.01 and sf0.1, see BASELINE r8 continuation),
-# then fill the 50-slot balance freshness-ordered: all 25 keys whose
-# latest official row is r4 (nanquantile_vec..xdim_dataset), then the
-# alphabetical head of the r6 block (5 of its 49).
-# R10 WINDOW PLAN (pre-written per VERDICT r8 item #7, rotation
-# discipline): after R9 every registered key has an official row; the
-# r10 first-50 is a pure freshness window, oldest-row-first — any red
-# keys from CORRECTNESS_r09.json first, then the 44 remaining r6-row
-# keys (clf_score, cms_heavy, complex_argmax, complex_nanmean,
-# complex_nanmedian, complex_nanvar, dayofyear, dup_clusters,
-# emb_neardup, encode_ids, first_ts, gopher, grid_fill, hist_quantile,
-# lm_score, lsh_pairs, mh_index_probe, min_count, minhash, mode,
-# month_hour, nanmode, ngram_jaccard, pii_redact, pivot, reindex_fill,
-# resample_5d, salted_join, scan_bfill, scan_cumcount, scan_cummax,
-# scan_cummin, scan_cumprod, scan_cumsum, scan_diff, scan_ffill,
-# scan_nancummax, scan_nancummin, scan_nancumprod, scan_nancumsum,
-# scan_shift, semdedup, stream_late, vocab), balance from the r7-row
-# block's alphabetical head (accessor_climatology, approx_quantile,
-# auc, bivar, bloom_decontam, bloom_join — drop from the tail to make
-# room for any red keys).
-_R9_WINDOW = [
-    # no official driver row yet (first-registered r8, 20 keys)
-    "funnel", "funnel_window", "funnel_timing", "retention",
-    "kmv_distinct", "kmv_overlap", "linreg", "grouped_linreg",
-    "logreg_quality", "grouped_logreg", "target_encode", "qcut",
-    "qcut_grouped", "qcut_two_pass", "dsir", "ann_recall",
-    "k_anonymity", "ngram_containment", "fuzzy_match", "json_extract",
-    # latest official row = r4 (25 keys)
-    "nanquantile_vec", "nanstd", "nansum", "nanvar", "nunique", "pack",
-    "prod", "quantile", "range_join", "resample_time", "sessionize",
-    "std", "stream_agg", "stream_enrich", "stream_join",
-    "stream_session", "stream_sliding", "stream_window", "sum", "twa",
-    "var", "winsorize", "wquantile_sketch", "xdim_bins", "xdim_dataset",
-    # latest official row = r6 (alphabetical head, 5 keys)
-    "bins_left", "bins_right", "bpe_tokens", "calendar_mean",
-    "chunk_docs",
-]
-assert len(_R9_WINDOW) == 50 and len(set(_R9_WINDOW)) == 50
-# R10 WINDOW (executes the pre-written plan above; CORRECTNESS_r09 was
-# 50/50 green so there are no red keys to front-load): pure freshness,
-# oldest-row-first — the 44 keys whose latest official row is r6, then
-# the alphabetical head of the r7-row block (6 keys). The remaining
-# r7-row keys are the natural R11 window, same ordering.
-_R10_WINDOW = [
-    # latest official row = r6 (44 keys)
-    "clf_score", "cms_heavy", "complex_argmax", "complex_nanmean",
-    "complex_nanmedian", "complex_nanvar", "dayofyear", "dup_clusters",
-    "emb_neardup", "encode_ids", "first_ts", "gopher", "grid_fill",
-    "hist_quantile", "lm_score", "lsh_pairs", "mh_index_probe",
-    "min_count", "minhash", "mode", "month_hour", "nanmode",
-    "ngram_jaccard", "pii_redact", "pivot", "reindex_fill",
-    "resample_5d", "salted_join", "scan_bfill", "scan_cumcount",
-    "scan_cummax", "scan_cummin", "scan_cumprod", "scan_cumsum",
-    "scan_diff", "scan_ffill", "scan_nancummax", "scan_nancummin",
-    "scan_nancumprod", "scan_nancumsum", "scan_shift", "semdedup",
-    "stream_late", "vocab",
-    # latest official row = r7 (alphabetical head, 6 keys)
-    "accessor_climatology", "approx_quantile", "auc", "bivar",
-    "bloom_decontam", "bloom_join",
-]
-assert len(_R10_WINDOW) == 50 and len(set(_R10_WINDOW)) == 50
-# R11 WINDOW (executes the pre-written plan above; CORRECTNESS_r10 was
-# 50/50 green so there are no red keys to front-load): the 3 r10-new
-# keys first (no official rows yet — new keys outrank freshness, the
-# r8/r9 precedent), then the 42 keys whose latest official row is r7,
-# then the alphabetical head of the r8-row block (5 keys).
-# media_phash/media_video pins were regenerated in r10 after the
-# integer-exact pHash v3 (container BLAS drift made the float v2
-# values environment-dependent) — their r11 rows are the first
-# OFFICIAL check of v3.  NOTE: fuzzy_match is NOT in this window (its
-# latest row is r9); its contract config migrated to the density-
-# relative cap default this round (rel_gram_df=0.05 — VERDICT r10
-# item #3), verified by the local gate at sf0.01 and the sf1 battery,
-# with its next official row due in R13 rotation.
-_R11_WINDOW = [
-    # r10-continuation NEW keys, no official rows yet
-    "fuzzy_scaled", "rolling_frac", "fuzzy_coverage",
-    # latest official row = r7 (42 keys)
-    "bm25", "calibration", "chisq", "corr", "dedup_exact", "describe",
-    "dup_spans", "entropy", "interp_time", "ks", "leak_split", "mad",
-    "media_phash", "media_video", "multimodal_meta", "ngram_counts",
-    "outliers", "overlap_join", "pagerank", "para_dedup", "profile",
-    "psi", "psi_hist", "qnorm", "quantize", "rank",
-    "resample_dense_keys", "seg_dedup", "simhash", "skew_stats",
-    "span_dedup", "spearman", "stream_cms", "stream_cumsum",
-    "stream_dedup", "table_diff", "ttest", "validate", "wquantile",
-    "wsample", "xdim_reduce", "zorder",
-    # balance: the r8-row block's alphabetical head (5 keys)
-    "all", "ann_ivf", "ann_lsh", "ann_topk", "any",
-]
-assert len(_R11_WINDOW) == 50 and len(set(_R11_WINDOW)) == 50
-# R12 WINDOW (executes the pre-written plan above; CORRECTNESS_r11 was
-# 50/50 green so there are no red keys to front-load): the r12-new
-# lsh_coverage key first (no official row yet — new keys outrank
-# freshness), then the 45 keys whose latest official row is r8 (the
-# stalest block), then the alphabetical head of the r9-row block (4
-# keys — the new key displaced calendar_mean to R13).
+# R12 WINDOW (CORRECTNESS_r11 was 50/50 green so there are no red keys
+# to front-load): the r12-new lsh_coverage key first (no official row
+# yet — new keys outrank freshness), then the 45 keys whose latest
+# official row is r8 (the stalest block), then the alphabetical head of
+# the r9-row block (4 keys — the new key displaced calendar_mean to R13).
 _R12_WINDOW = [
     # r12-NEW key: the embedding-LSH occupancy audit (VERDICT r11 #2)
     "lsh_coverage",

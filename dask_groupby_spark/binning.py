@@ -148,10 +148,9 @@ def quantile_bins(
         raise ValueError(f"q must be >= 2, got {q}")
     if q > resolution_guard:
         raise ValueError(f"q={q} exceeds resolution_guard={resolution_guard}")
-    if method not in ("window", "two_pass", "auto"):
-        raise ValueError(
-            f"method must be 'window', 'two_pass', or 'auto', got {method!r}"
-        )
+    from .two_pass import check_tier
+
+    check_tier(method)
     if "__edges" in df.columns:
         raise ValueError(
             "quantile_bins: input column '__edges' collides with the "
@@ -194,7 +193,7 @@ def quantile_bins(
     n_tbl = vals.groupBy(*by_list).agg(F.count(F.lit(1)).alias("__n")).persist()
     execution = method
     if method == "auto":
-        # r11 (the dispatch_auto ladder, VERDICT r10 #1): a driver-only
+        # r11 (the choose_tier ladder, VERDICT r10 #1): a driver-only
         # metadata row bound on the VALUES frame (parquet footers /
         # cached-relation stats) proving total rows <= rows_per_chunk
         # proves no group can exceed it — window tier, ZERO probe jobs.
@@ -358,16 +357,10 @@ def quantile_bins(
     # (documented; read it BEFORE transforming the result — the attribute
     # does not propagate through transformations).
     edge_arr = edge_arr.persist()
-    earr = edge_arr.select(
-        *[F.col(c).alias(f"__qb_by_{i}") for i, c in enumerate(by_list)],
-        "__edges",
-    )
-    jcond = None
-    for i, c in enumerate(by_list):
-        e = F.col(c).eqNullSafe(F.col(f"__qb_by_{i}"))
-        jcond = e if jcond is None else jcond & e
-    j = df.join(F.broadcast(earr), on=jcond, how="left").drop(
-        *[f"__qb_by_{i}" for i in range(len(by_list))]
+    from .core import nullsafe_join
+
+    j = nullsafe_join(
+        df, edge_arr, by_list, how="left", broadcast=True, prefix="__qb_by"
     )
     b = F.aggregate(
         F.coalesce(F.col("__edges"), F.array().cast("array<double>")),

@@ -76,9 +76,11 @@ def _make_ctx(
 
 
 def _pin_small(df: DataFrame) -> DataFrame:
-    """Pin a KB-class intermediate (a |groups|-row aggregate) so multiple
-    consumers read materialized rows instead of collapsing back onto the
-    base table (the r12 3-scans→1 grid fix).
+    """Pin an intermediate with several consumers so they read
+    materialized rows instead of collapsing back onto its lineage: KB-class
+    |groups|-row aggregates (the r12 3-scans→1 grid fix) and corpus-sized
+    frames alike (the dedup bucket rows, partial indexes and
+    label-propagation rounds).
 
     Default is a LAZY ``localCheckpoint``: no CacheManager registry entry
     to leak, blocks freed with the DataFrame.  Local checkpoints store
@@ -456,14 +458,15 @@ def groupby_scan(
     :mod:`dask_groupby_spark.two_pass`.
 
     ``method="auto"`` (DEFAULT — a user who never reads the scale docs
-    still gets the plan that survives few/huge groups): materializes the
-    per-group ``(min(idx), max(idx), count)`` chunking stats — the exact
-    pass-0 aggregate two_pass needs — and picks two_pass when some group
-    exceeds ``rows_per_chunk`` rows AND the func/idx dtype support it;
-    otherwise the plain window.  On the scale path the probe's persisted
-    stats frame is passed straight into two_pass, so dispatch is FREE
-    there; on the window path it costs one map-combined aggregate over
-    the key+idx columns only.
+    still gets the plan that survives few/huge groups): picks two_pass
+    when some group exceeds ``rows_per_chunk`` rows AND the func/idx
+    dtype support it; otherwise the plain window
+    (:func:`dask_groupby_spark.two_pass.choose_tier`).  A driver-only
+    row bound settles small frames with no job; otherwise the probe
+    materializes the per-group ``(min(idx), max(idx), count)`` chunking
+    stats — the exact pass-0 aggregate two_pass needs, passed straight
+    into it, so dispatch is FREE on the scale path and costs one
+    map-combined aggregate over the key+idx columns on the window path.
 
     Rows with missing group labels pass through with a NULL/NaN result
     (the reference excludes code −1 elements from scans likewise).
@@ -523,30 +526,24 @@ def groupby_scan(
             ok = ok & ~F.isnan(k)
         label_ok = ok if label_ok is None else (label_ok & ok)
 
-    pre_stats = None
-    if method == "auto":
-        from .two_pass import TWO_PASS_FUNCS, _idx_numeric, dispatch_auto
+    from .two_pass import TWO_PASS_FUNCS, _idx_numeric, choose_tier, scan_two_pass
 
-        eligible = spec.name in TWO_PASS_FUNCS
-        idxn = None
-        if eligible:
-            try:
-                idxn = _idx_numeric(work, idx_col)
-            except ValueError:
-                eligible = False
-        if eligible:
-            method, pre_stats = dispatch_auto(
-                work, list(by), idxn, rows_per_chunk
-            )
-        else:
-            method = "window"
-    if method == "two_pass":
-        from .two_pass import scan_two_pass
-
+    why_not = None
+    if spec.name not in TWO_PASS_FUNCS:
+        why_not = (
+            f"func={spec.name!r} has no associative combine; two_pass supports "
+            f"{sorted(TWO_PASS_FUNCS)} (shift/diff stay on the window path)"
+        )
+    tier, stats = choose_tier(
+        method, why_not, work, list(by), lambda: _idx_numeric(work, idx_col),
+        rows_per_chunk,
+    )
+    if tier == "two_pass":
         ctx.kw["__idx_col_name"] = idx_col
         return scan_two_pass(
             work,
             by,
+            stats,
             spec.name,
             ctx,
             result_dt,
@@ -554,11 +551,6 @@ def groupby_scan(
             label_ok,
             dt_rules.na_lit(result_dt),
             rows_per_chunk=rows_per_chunk,
-            stats=pre_stats,
-        )
-    if method != "window":
-        raise ValueError(
-            f"method must be 'window', 'two_pass', or 'auto', got {method!r}"
         )
 
     col = spec.build(ctx, w).cast(result_dt)
@@ -640,43 +632,28 @@ def groupby_rank(
     if method == "first" and idx_col is None:
         raise ValueError('method="first" requires idx_col= (appearance order)')
     out_name = alias or "rank"
-    pre_stats = None
-    if execution == "auto":
-        from .two_pass import _idx_numeric, dispatch_auto
-
-        try:
-            vnum = _idx_numeric(df, value)
-        except ValueError:
-            vnum = None
-        if vnum is not None:
-            va = F.col(value).isNotNull()
-            if isinstance(df.schema[value].dataType, (T.FloatType, T.DoubleType)):
-                va = va & ~F.isnan(F.col(value))
-            execution, pre_stats = dispatch_auto(
-                df.where(va),
-                list(by),
-                vnum if ascending else -vnum,
-                rows_per_chunk,
-                "__tp_nv",
-            )
-        else:
-            execution = "window"
-    if execution == "two_pass":
-        from .two_pass import rank_two_pass
-
-        return rank_two_pass(
-            df, by, value, method, ascending, pct, idx_col, out_name,
-            rows_per_chunk=rows_per_chunk, stats=pre_stats,
-        )
-    if execution != "window":
-        raise ValueError(
-            f"execution must be 'window', 'two_pass', or 'auto', got {execution!r}"
-        )
-
     v = F.col(value)
     valid = v.isNotNull()
     if isinstance(df.schema[value].dataType, (T.FloatType, T.DoubleType)):
         valid = valid & ~F.isnan(v)
+
+    from .two_pass import _idx_numeric, choose_tier, rank_two_pass
+
+    def axis():
+        vnum = _idx_numeric(df, value)
+        return vnum if ascending else -vnum
+
+    # pass 0 counts VALID rows only (NULL/NaN values never consume a rank)
+    tier, stats = choose_tier(
+        execution, None, df.where(valid), list(by), axis, rows_per_chunk,
+        count_col="__tp_nv", param="execution",
+    )
+    if tier == "two_pass":
+        return rank_two_pass(
+            df, by, stats, value, method, ascending, pct, idx_col, out_name,
+            rows_per_chunk=rows_per_chunk,
+        )
+
     clean = F.when(valid, v)  # NULL for missing → sorts last in both orders
 
     order = clean.asc_nulls_last() if ascending else clean.desc_nulls_last()
@@ -917,25 +894,17 @@ def groupby_interpolate(
     x = time_to_seconds(df, order_cols[0])
     if limit is not None and limit < 1:
         raise ValueError("limit must be >= 1")
-    pre_stats = None
-    if method == "auto":
-        from .two_pass import dispatch_auto
+    from .two_pass import choose_tier, interpolate_two_pass
 
-        # the lerp axis is numeric by construction (time_to_seconds /
-        # cast), so the only auto gate is group size
-        method, pre_stats = dispatch_auto(
-            df, list(by), x.cast("double"), rows_per_chunk
-        )
-    if method == "two_pass":
-        from .two_pass import interpolate_two_pass
-
+    # the lerp axis is numeric by construction (time_to_seconds / cast),
+    # so the only auto gate is group size
+    tier, stats = choose_tier(
+        method, None, df, list(by), lambda: x.cast("double"), rows_per_chunk
+    )
+    if tier == "two_pass":
         return interpolate_two_pass(
-            df, by, value, order_cols, out, limit, missing, x,
-            rows_per_chunk=rows_per_chunk, stats=pre_stats,
-        )
-    if method != "window":
-        raise ValueError(
-            f"method must be 'window', 'two_pass', or 'auto', got {method!r}"
+            df, by, stats, value, order_cols, out, limit, missing, x,
+            rows_per_chunk=rows_per_chunk,
         )
     base = Window.partitionBy(*by).orderBy(*[F.col(c) for c in order_cols])
     # forward-looking carries run over the DESC-reversed sort with the

@@ -35,10 +35,6 @@ def is_integral(dt: T.DataType) -> bool:
     return isinstance(dt, _INTEGRAL)
 
 
-def is_numeric(dt: T.DataType) -> bool:
-    return is_float(dt) or is_integral(dt) or isinstance(dt, T.DecimalType)
-
-
 def is_bool(dt: T.DataType) -> bool:
     return isinstance(dt, T.BooleanType)
 

@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..core import _pin_small
 from .text import tokens
 
 
@@ -359,13 +360,10 @@ def _spilled_bucket_pairs(
             "re-assemble whole and apply the cap there)"
         )
     cap = max_bucket_size
-    # lazy checkpoint: the upstream pipeline (signature hashing, band
-    # explode — the one corpus scan) runs exactly once, feeding both the
-    # pre-count and whichever collection tier wins, with no
-    # session-lifetime cache to leak
-    base = rows.select(*bucket_cols, member.alias("__m")).localCheckpoint(
-        eager=False
-    )
+    # lazy pin: the upstream pipeline (signature hashing, band explode —
+    # the one corpus scan) runs exactly once, feeding both the pre-count
+    # and whichever collection tier wins
+    base = _pin_small(rows.select(*bucket_cols, member.alias("__m")))
     # spilling buckets are near-empty by definition (each holds more rows
     # than the threshold), so the decision keys off the TINY over-
     # threshold set: the size aggregate is narrow (counts only — no arrays
@@ -387,17 +385,16 @@ def _spilled_bucket_pairs(
             .where(F.size("mem") >= 2)
         )
         return bucket_pairs_from(buckets, "mem", pair, cap)
-    part = (
+    # the partial index feeds three consumers below (sub-threshold
+    # regroup, the spilling semi-join, the anchor merge) — pinned so the
+    # salted collection itself runs once
+    part = _pin_small(
         base.groupBy(
             *bucket_cols,
             F.pmod(F.xxhash64("__m"), F.lit(salt_partitions)).alias("__salt"),
         )
         .agg(F.array_sort(F.collect_list("__m")).alias("__mp"))
         .drop("__salt")
-        # the partial index feeds three consumers below (sub-threshold
-        # regroup, the spilling semi-join, the anchor merge) — checkpoint
-        # so the salted collection itself runs once
-        .localCheckpoint(eager=False)
     )
     small = (
         part.join(over, on=bucket_cols, how="left_anti")
@@ -882,15 +879,13 @@ def duplicate_clusters(
     # shuffle.  Pathological long chains merely fall through to the
     # min-label loop over the contracted (never larger) edge set.
     # ------------------------------------------------------------------
-    m = (
+    # lazy pin: materialized by the contracted-edge count below — the
+    # caller's final action reads the pinned rows instead of re-running
+    # the edge pipeline
+    m = _pin_small(
         edges.groupBy("src")
         .agg(F.least(F.min("dst"), F.col("src")).alias("mlbl"))
         .select(F.col("src").alias("mv"), "mlbl")
-        # lazy checkpoint, not persist: materialized by the contracted-
-        # edge count below, blocks freed with the DataFrame (no
-        # CacheManager entry to leak) — the caller's final action reads
-        # the checkpointed rows instead of re-running the edge pipeline
-        .localCheckpoint(eager=False)
     )
     contracted = (
         # edges is symmetric, so (m(src), m(dst)) lands in both orders —
@@ -981,9 +976,9 @@ def duplicate_clusters(
     for _ in range(max_iter):
         # two hops per materialization: near-dup clusters have tiny
         # diameters, so doubling the hop count per blocking round halves
-        # the number of driver round-trips; the checkpoint is lazy — the
+        # the number of driver round-trips; the pin is lazy — the
         # convergence count below is the job that materializes it
-        new = step(step(labels)).localCheckpoint(eager=False)
+        new = _pin_small(step(step(labels)))
         # exact, type-agnostic convergence certificate: compare against the
         # previous round (both sides hash-partitioned by v from the
         # groupBy, so the join adds no Exchange).  NOT a Σlbl aggregate —

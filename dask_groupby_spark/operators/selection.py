@@ -105,22 +105,13 @@ def sessionize(
         raise ValueError(
             f"out={out!r} collides with an existing column — rename it first"
         )
+    from ..two_pass import choose_tier, sessionize_two_pass
+
     ts = time_to_seconds(df, ts_col)
-    pre_stats = None
-    if method == "auto":
-        from ..two_pass import dispatch_auto
-
-        method, pre_stats = dispatch_auto(df, list(by), ts, rows_per_chunk)
-    if method == "two_pass":
-        from ..two_pass import sessionize_two_pass
-
+    tier, stats = choose_tier(method, None, df, list(by), lambda: ts, rows_per_chunk)
+    if tier == "two_pass":
         return sessionize_two_pass(
-            df, by, ts_col, gap, out, ts, rows_per_chunk=rows_per_chunk,
-            stats=pre_stats,
-        )
-    if method != "window":
-        raise ValueError(
-            f"method must be 'window', 'two_pass', or 'auto', got {method!r}"
+            df, by, stats, ts_col, gap, out, ts, rows_per_chunk=rows_per_chunk
         )
     w = Window.partitionBy(*by).orderBy(F.col(ts_col).asc())
     prev = F.lag(ts).over(w)

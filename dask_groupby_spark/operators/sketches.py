@@ -45,10 +45,19 @@ def hll_merge_count(
 ) -> DataFrame:
     """Merged distinct-count estimates from sketch rows (the output of one
     or many :func:`hll_sketch_table` batches): groups the sketch rows by
-    ``by`` (or fully, when no keys are given) and unions per group —
-    associative, order-insensitive, so daily rows roll up to any window.
-    The shuffle carries KB-sized sketches, never raw values."""
-    agg = F.hll_sketch_estimate(F.hll_union_agg(F.col("hll"), F.lit(True))).alias(out)
+    ``by`` (or fully, when no keys are given) and unions per group, so
+    daily rows roll up to any window.  The shuffle carries KB-sized
+    sketches, never raw values.
+
+    The union's registers do not depend on how the rows were batched or
+    partitioned, but the estimator can: a sketch built in a single pass
+    keeps DataSketches' order-dependent HIP estimate, while a merged one
+    uses the composite estimator.  Unioning the merged sketch with itself
+    always yields the composite estimate, a function of the registers
+    alone — so one-shot and batched sketches of the same rows give the
+    same estimate at any partition count."""
+    merged = F.hll_union_agg(F.col("hll"), F.lit(True))
+    agg = F.hll_sketch_estimate(F.hll_union(merged, merged)).alias(out)
     if by:
         return sketches.groupBy(*by).agg(agg)
     return sketches.agg(agg)

@@ -101,16 +101,6 @@ def count_exchanges(df: DataFrame) -> int:
     return len(re.findall(r"^\(\d+\) Exchange", physical_plan(df), re.M))
 
 
-def assert_single_shuffle(df: DataFrame) -> None:
-    """Assert the plan contains at most one Exchange below the final agg —
-    the shape we expect from partial→final hash aggregation."""
-    n = count_exchanges(df)
-    if n > 1:
-        raise AssertionError(
-            f"unexpected shuffle count {n} in plan:\n{physical_plan(df)}"
-        )
-
-
 def zorder_key(
     df: DataFrame,
     cols: "list[str]",

@@ -265,50 +265,32 @@ def groupby_rolling(
         range_between = (lo_n, hi_n)
     else:
         frac = False
-    pre_stats = None
-    if method == "auto":
-        from .two_pass import _idx_numeric, dispatch_auto
+    from .two_pass import _CHUNK, _idx_numeric, choose_tier, rolling_two_pass
 
-        eligible = (
-            range_between is not None
-            and range_between[0] <= 0 <= range_between[1]
+    if range_between is None:
+        why_not = (
+            "method='two_pass' requires range_between= (row-count frames "
+            "cannot be chunked arithmetically — the window path handles them)"
         )
-        idxn = None
-        if eligible:
-            try:
-                idxn = _idx_numeric(df, idx_col)
-            except ValueError:
-                eligible = False
-        if eligible:
-            method, pre_stats = dispatch_auto(
-                df, list(by), idxn, rows_per_chunk
-            )
-        else:
-            method = "window"
-    if method == "two_pass":
-        if range_between is None:
-            raise ValueError(
-                "method='two_pass' requires range_between= (row-count frames "
-                "cannot be chunked arithmetically — the window path handles them)"
-            )
-        from .two_pass import _CHUNK, rolling_two_pass
-
+    elif not (range_between[0] <= 0 <= range_between[1]):
+        why_not = "two_pass range frames need lo <= 0 <= hi"
+    else:
+        why_not = None
+    tier, stats = choose_tier(
+        method, why_not, df, list(by), lambda: _idx_numeric(df, idx_col),
+        rows_per_chunk,
+    )
+    if tier == "two_pass":
         lo, hi = range_between
-        if not (lo <= 0 <= hi):
-            raise ValueError("two_pass range frames need lo <= 0 <= hi")
         return rolling_two_pass(
             df,
             by,
+            stats,
             idx_col,
             lo,
             hi,
             lambda fdf, w: apply_frames(fdf, w, Window.partitionBy(*by, _CHUNK)),
             rows_per_chunk=rows_per_chunk,
-            stats=pre_stats,
-        )
-    if method != "window":
-        raise ValueError(
-            f"method must be 'window', 'two_pass', or 'auto', got {method!r}"
         )
 
     if range_between is not None and frac:

@@ -23,9 +23,9 @@ Spark re-expression (this module) — NOT a translation of the dask graph:
    across consumers — the broadcast-join branches re-read the pruned
    parquet scan instead, which is the cheap thing to re-read).
 2. **Per-chunk states** via ``groupBy(keys, chunk)`` — partial-aggregated
-   map-side; the state table has at most ``groups x max_chunks`` rows.
+   map-side; the state table has at most ``groups x MAX_CHUNKS`` rows.
 3. **Exclusive prefix of chunk states** per group, ordered by chunk id — a
-   window over the TINY state table (one task per group over <= max_chunks
+   window over the TINY state table (one task per group over <= MAX_CHUNKS
    rows; the reference's tree combine collapses to this because the state
    table fits trivially).
 4. **Recombine**: broadcast the offsets back and evaluate the LOCAL scan
@@ -47,7 +47,6 @@ path (their frames need neighbor rows, not a prefix state).
 from __future__ import annotations
 
 import re
-from collections import OrderedDict
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame, Window
@@ -57,6 +56,9 @@ from pyspark.sql import types as T
 from . import dtypes as dt_rules
 
 _CHUNK = "__tp_chunk"
+# Per-group chunk cap: bounds the chunk-state tables at groups x MAX_CHUNKS
+# rows (EWMA's exponent-safe chunking is exempt, see ewma_two_pass).
+MAX_CHUNKS = 4096
 _PROPAGATING = {"cumsum", "cumprod", "cummax", "cummin"}
 _SKIP_OF = {
     "cumsum": "nancumsum",
@@ -120,15 +122,13 @@ def _nan_safe_offsets(
     return out.drop(*marks.values())
 
 
-def _chunk_of(idxn, idx_col: str | None = None, sentinel_when=None):
+def _chunk_of(idxn, sentinel_when: Column) -> Column:
     """Value-bucketed chunk index from the joined __tp_a/__tp_b/__tp_c
     per-group stats: floor((idx - a) / width) clamped into [0, c), with the
     degenerate-span (single idx value / empty group) collapse to chunk 0.
-    Rows matching the sentinel predicate (``sentinel_when``, defaulting
-    to ``idx_col IS NULL``) go to chunk -1 — they sort first under the
-    window path's orderBy, or carry no rank/position at all (rank's
-    ``~valid``).  ONE definition for the seven formerly hand-copied
-    blocks in this module (r9 review)."""
+    Rows matching ``sentinel_when`` (typically ``idx IS NULL``) go to
+    chunk -1 — they sort first under the window path's orderBy, or carry
+    no rank/position at all (rank's ``~valid``)."""
     width = (F.col("__tp_b") - F.col("__tp_a")) / F.col("__tp_c").cast("double")
     c = F.when(
         F.col("__tp_a").isNull() | (width <= F.lit(0.0)), F.lit(0).cast("long")
@@ -141,11 +141,7 @@ def _chunk_of(idxn, idx_col: str | None = None, sentinel_when=None):
             ),
         )
     )
-    if sentinel_when is None and idx_col is not None:
-        sentinel_when = F.col(idx_col).isNull()
-    if sentinel_when is not None:
-        c = F.when(sentinel_when, F.lit(-1).cast("long")).otherwise(c)
-    return c
+    return F.when(sentinel_when, F.lit(-1).cast("long")).otherwise(c)
 
 
 def _no_tp_collisions(df: DataFrame) -> None:
@@ -197,10 +193,9 @@ def _idx_numeric(df: DataFrame, idx_col: str) -> Column:
 def _chunk_stats(df: DataFrame, keys: list, idxn, count_col: str = "__tp_n") -> DataFrame:
     """Pass 0 of every two-pass plan: the per-group chunking stats —
     min/max of the bucketing axis plus the row count.  Map-side combined,
-    column-pruned to keys+axis, KB-class output.  One definition for the
-    seven formerly hand-copied aggregates in this module AND the auto-tier
-    probe (the probe IS this aggregate, so dispatch costs nothing extra
-    when the scale tier is chosen)."""
+    column-pruned to keys+axis, KB-class output.  Built only by
+    :func:`choose_tier`, whose auto probe IS this aggregate, so dispatch
+    costs nothing extra when the scale tier is chosen."""
     return df.groupBy(*keys).agg(
         F.min(idxn).alias("__tp_a"),
         F.max(idxn).alias("__tp_b"),
@@ -326,124 +321,117 @@ def _metadata_row_bound(df: DataFrame, max_files: int = 4096):
         return None
 
 
-# Probe memo: (semanticHash, columns, keys, idx expr, file signature) ->
-# observed max-group-size from a prior probe THIS session.  Only ever used
-# to re-pick the window tier without a job — the two tiers are bit-exact
-# (test_two_pass.py parity), so even a semanticHash collision could only
-# change the plan shape, never the result.  Bounded LRU.  The file
-# signature (ADVICE r11 #3) folds the sorted input-file names plus local
-# mtime/size into the key, so a mid-session parquet rewrite (new part-file
-# names, or same names with new stat) simply misses the memo and re-probes
-# instead of replaying a stale window decision; ``clear_auto_memo()`` is
-# the explicit invalidation hook for anything the signature can't see.
-_AUTO_MEMO: "OrderedDict[tuple, int]" = OrderedDict()
-_AUTO_MEMO_CAP = 64
-_MEMO_STAT_FILES = 64  # stat() at most this many local files per key
-
-
-def clear_auto_memo() -> None:
-    """Drop every memoized probe result (explicit invalidation hook for
-    pipelines that rewrite input files mid-session in ways the file
-    signature cannot observe, e.g. remote object stores)."""
-    _AUTO_MEMO.clear()
-
-
-def _file_signature(df: DataFrame):
-    """Cheap freshness component for the probe memo: a hash of the sorted
-    input-file URIs, plus mtime_ns/size for local files (capped — name
-    hash alone already catches parquet rewrites, which generate fresh
-    part-file names)."""
-    try:
-        files = sorted(df.inputFiles())
-    except Exception:
-        return None
-    if not files:
-        return 0
-    import os
-    from urllib.parse import unquote, urlparse
-
-    sig = []
-    for uri in files[:_MEMO_STAT_FILES]:
-        u = urlparse(uri)
-        if u.scheme in ("file", ""):
-            try:
-                st = os.stat(unquote(u.path))
-                sig.append((uri, st.st_mtime_ns, st.st_size))
-                continue
-            except OSError:
-                pass
-        sig.append((uri, None, None))
-    return hash((len(files), tuple(files), tuple(sig)))
-
-
-def _memo_key(df: DataFrame, keys: list, idxn):
-    try:
-        return (
-            df.semanticHash(),
-            tuple(df.columns),
-            tuple(keys),
-            str(idxn),
-            _file_signature(df),
+def check_tier(method: str, param: str = "method", window: str = "window") -> None:
+    """Reject an unknown tier name.  The one validation shared by the
+    two-pass front ends (through :func:`choose_tier`) and
+    ``quantile_bins``; ``window`` names the single-task tier (``ewma``
+    calls it "pandas")."""
+    if method not in (window, "two_pass", "auto"):
+        raise ValueError(
+            f"{param} must be '{window}', 'two_pass', or 'auto', got {method!r}"
         )
-    except Exception:
-        return None
 
 
-def dispatch_auto(
+def choose_tier(
+    method: str,
+    why_not: Optional[str],
     df: DataFrame,
     keys: list,
-    idxn,
+    axis,
     rows_per_chunk: int,
+    *,
     count_col: str = "__tp_n",
+    param: str = "method",
+    window: str = "window",
 ):
-    """Auto-tier dispatch for the window-shaped ops (VERDICT r9 #2: the
-    scale tier must be the DEFAULT, and the probe must be free on the
-    scale path).  Decision ladder, cheapest first (VERDICT r10 #1 — the
-    probe used to be paid exactly when it bought nothing):
+    """The tier front door of every two-pass operator: validates the
+    caller's ``method`` and returns ``(tier, stats)``, where ``stats`` is
+    the persisted pass-0 aggregate (:func:`_chunk_stats` of ``df`` over
+    ``axis()``, row count in ``count_col``) when the tier is two_pass and
+    ``None`` otherwise.  The ``*_two_pass`` operators take it as given.
+
+    ``why_not`` is ``None`` when the call can run two-pass, else the
+    reason it cannot (a non-associative func, a row-count frame, ...):
+    auto then keeps ``window`` and a forced two_pass raises it.  ``axis``
+    is a zero-argument callable returning the numeric bucketing axis; a
+    ValueError from it (an axis that cannot be bucketed) keeps auto on
+    ``window`` and propagates from a forced two_pass.
+
+    Auto ladder, cheapest first:
 
     1. ``__tp_*`` namespace collision -> window, no job (auto must never
-       turn a previously-working call into an error).
-    2. Memoized probe result for this (plan, keys, idx) showing no group
-       exceeds ``rows_per_chunk`` -> window, no job.
-    3. Parquet-footer row bound (:func:`_metadata_row_bound`) <=
-       ``rows_per_chunk`` -> window, no job: if the WHOLE frame fits in
-       one chunk, no group can exceed it.  Driver-only footer reads —
-       this is the common small-scale path.
-    4. Otherwise the probe: materialize the per-group chunking stats
-       (:func:`_chunk_stats`, persisted) and read ``max(count)`` off the
-       cached KB-class table — ONE small job whose work is exactly the
-       two-pass plan's pass 0.  Returns ``("two_pass", stats)`` when some
-       group exceeds ``rows_per_chunk`` rows (pass ``stats`` through so
-       the scale tier skips its own pass 0 — auto is then FREE on the
-       scale path), else ``("window", None)`` with the probe's cache
-       released and the max-group-size memoized for step 2."""
-    if any(c.startswith("__tp_") for c in df.columns):
-        return "window", None
-    key = _memo_key(df, keys, idxn)
-    if key is not None:
-        known_mx = _AUTO_MEMO.get(key)
-        if known_mx is not None and known_mx <= rows_per_chunk:
-            _AUTO_MEMO.move_to_end(key)
-            return "window", None
+       turn a working call into an error).
+    2. Driver-only row bound (:func:`_metadata_row_bound`: parquet
+       footers, cached-relation stats) <= ``rows_per_chunk`` -> window,
+       no job: if the WHOLE frame fits in one chunk, no group can exceed
+       it.  The common small-scale path.
+    3. Otherwise the probe: persist the pass-0 aggregate and read
+       ``max(count)`` off the KB-class table — ONE small job whose work
+       is exactly the two-pass plan's pass 0, so auto is free on the
+       scale path.  Two_pass when some group exceeds ``rows_per_chunk``
+       rows; else the probe's cache is released and the tier is window.
+       Every call on an unboundable frame (join/explode lineage) runs
+       this probe again — nothing is memoized across calls."""
+    check_tier(method, param, window)
+    if method == window:
+        return window, None
+    if method == "two_pass":
+        if why_not is not None:
+            raise ValueError(why_not)
+        _no_tp_collisions(df)
+        return "two_pass", _chunk_stats(df, keys, axis(), count_col).persist()
+    if why_not is not None or any(c.startswith("__tp_") for c in df.columns):
+        return window, None
+    try:
+        idxn = axis()
+    except ValueError:
+        return window, None
     bound = _metadata_row_bound(df)
     if bound is not None and bound <= rows_per_chunk:
-        return "window", None
+        return window, None
     stats = _chunk_stats(df, keys, idxn, count_col).persist()
     mx = stats.agg(F.max(count_col)).collect()[0][0] or 0
-    if key is not None:
-        _AUTO_MEMO[key] = mx
-        _AUTO_MEMO.move_to_end(key)
-        while len(_AUTO_MEMO) > _AUTO_MEMO_CAP:
-            _AUTO_MEMO.popitem(last=False)
     if mx > rows_per_chunk:
         return "two_pass", stats
     stats.unpersist()
-    return "window", None
+    return window, None
+
+
+def _chunk_count(rows_per_chunk: int, count_col: str = "__tp_n", cap: bool = True) -> Column:
+    """Chunks per group from the pass-0 row count: ``ceil(count /
+    rows_per_chunk)``, at least 1 and (``cap``) at most
+    :data:`MAX_CHUNKS`."""
+    n = F.greatest(
+        F.lit(1).cast("long"), F.ceil(F.col(count_col) / F.lit(rows_per_chunk))
+    )
+    return F.least(F.lit(MAX_CHUNKS).cast("long"), n) if cap else n
+
+
+def _assign_chunks(
+    df: DataFrame,
+    keys: list,
+    stats: DataFrame,
+    nchunks: Column,
+    axis: Column,
+    sentinel_when: Column,
+    keep_bounds: bool = False,
+) -> DataFrame:
+    """The shared chunk-assignment prelude of the two-pass operators:
+    broadcast-join the pass-0 ``stats`` (with ``nchunks`` as ``__tp_c``)
+    onto ``df`` and tag every row with its chunk id ``_CHUNK``
+    (:func:`_chunk_of` over ``axis``).  The per-group bounds
+    ``__tp_a/__tp_b/__tp_c`` are dropped unless ``keep_bounds``."""
+    per_group = stats.withColumn("__tp_c", nchunks).drop("__tp_n")
+    big = _ns_join(df, per_group, keys).withColumn(
+        _CHUNK, _chunk_of(axis, sentinel_when)
+    )
+    return big if keep_bounds else big.drop("__tp_a", "__tp_b", "__tp_c")
 
 
 def scan_two_pass(
     work: DataFrame,
     by: tuple,
+    stats: DataFrame,
     func_name: str,
     ctx,
     result_dt,
@@ -451,8 +439,6 @@ def scan_two_pass(
     label_ok: Optional[Column],
     na_value: Column,
     rows_per_chunk: int = 2_000_000,
-    max_chunks: int = 4096,
-    stats: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Execute one scan func via the two-pass plan.  Returns ``work`` plus
     the result column ``out_name`` — same contract as the window path in
@@ -461,39 +447,20 @@ def scan_two_pass(
     ``ctx`` is the shared scan Ctx (v/clean/missing/valid/idx); ``label_ok``
     the missing-group-label gate (None when no keys can be missing);
     ``na_value`` the NA literal of the result dtype.  ``stats``: the
-    already-persisted :func:`_chunk_stats` frame from the auto probe —
-    when given, pass 0 is skipped (dispatch was free).
+    persisted pass-0 aggregate from :func:`choose_tier` — KB-class,
+    consumed by several plan branches (AQE never reuses an Exchange
+    across consumers, so the persist keeps the source scan under it
+    single-execution); the result exposes it as ``two_pass_stats``.
     """
-    _no_tp_collisions(work)
-    if func_name not in TWO_PASS_FUNCS:
-        raise ValueError(
-            f"func={func_name!r} has no associative combine; two_pass supports "
-            f"{sorted(TWO_PASS_FUNCS)} (shift/diff stay on the window path)"
-        )
     keys = list(by)
-    idx_col_name = None
     # Ctx.idx is F.col(idx_col); recover the name from the caller's frame
     # is fragile — require it explicitly via ctx.kw stash instead.
     idx_col_name = ctx.kw["__idx_col_name"]
     idxn = _idx_numeric(work, idx_col_name)
-
-    # ---- pass 0: per-group chunking stats (tiny; map-side combined) -------
-    # KB-class per-group table consumed by several plan branches; AQE never
-    # reuses an Exchange across consumers, so persist to keep the source
-    # scan under it single-execution (LRU reclaims the KB entry; the
-    # returned frame exposes it via the two_pass_stats handle).  The
-    # persist sits on the RAW aggregate so the auto probe's frame slots in
-    # directly; the __tp_c projection on top reads cached rows.
-    raw = stats if stats is not None else _chunk_stats(work, keys, idxn).persist()
-    nchunks = F.least(
-        F.lit(max_chunks).cast("long"),
-        F.greatest(F.lit(1).cast("long"), F.ceil(F.col("__tp_n") / F.lit(rows_per_chunk))),
+    big = _assign_chunks(
+        work, keys, stats, _chunk_count(rows_per_chunk), idxn,
+        F.col(idx_col_name).isNull(),
     )
-    stats = raw.withColumn("__tp_c", nchunks).drop("__tp_n")
-
-    joined = _ns_join(work, stats, keys)
-    chunk = _chunk_of(idxn, idx_col_name)
-    big = joined.withColumn(_CHUNK, chunk).drop("__tp_a", "__tp_b", "__tp_c")
 
     # ---- pass 1: per-(group, chunk) states (tiny output) ------------------
     skip_name = _SKIP_OF.get(func_name, func_name)
@@ -549,20 +516,19 @@ def scan_two_pass(
     # restore the caller's column order (join(on=keys) fronts the keys),
     # substituting in place when out_name overwrites an existing column
     res = _select_with_out(out, work.columns, out_name, col)
-    res.two_pass_stats = raw  # persist-handle convention (bm25 precedent)
+    res.two_pass_stats = stats  # persist-handle convention (bm25 precedent)
     return res
 
 
 def rolling_two_pass(
     df: DataFrame,
     by: tuple,
+    stats: DataFrame,
     idx_col: str,
     lo,
     hi,
     build_exprs,
     rows_per_chunk: int = 2_000_000,
-    max_chunks: int = 4096,
-    stats: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Two-pass execution for RANGE-frame rolling aggregates
     (``rangeBetween(lo, hi)``, lo <= 0 <= hi, both finite).
@@ -583,16 +549,11 @@ def rolling_two_pass(
     output columns (the caller's existing two-stage builder — semantics
     stay in rolling.py, only the partitioning here).
     """
-    _no_tp_collisions(df)
     keys = list(by)
     idxn = _idx_numeric(df, idx_col)
     margin = float(max(-lo, hi, 0.0))
 
-    raw = stats if stats is not None else _chunk_stats(df, keys, idxn).persist()
-    nchunks = F.least(
-        F.lit(max_chunks).cast("long"),
-        F.greatest(F.lit(1).cast("long"), F.ceil(F.col("__tp_n") / F.lit(rows_per_chunk))),
-    )
+    nchunks = _chunk_count(rows_per_chunk)
     if margin > 0:
         # chunk width must be >= the context margin, so fringe replication
         # never has to reach beyond the adjacent chunk
@@ -603,13 +564,10 @@ def rolling_two_pass(
                 F.lit(1).cast("long"), F.floor(span / F.lit(margin)).cast("long")
             ),
         )
-    # persist sits on the raw aggregate (KB-class; AQE never reuses an
-    # Exchange across consumers) — see scan_two_pass; auto probe slots in
-    stats = raw.withColumn("__tp_c", nchunks).drop("__tp_n")
-
-    joined = _ns_join(df, stats, keys)
-    c0 = _chunk_of(idxn, idx_col)
-    joined = joined.withColumn("__tp_c0", c0)
+    joined = _assign_chunks(
+        df, keys, stats, nchunks, idxn, F.col(idx_col).isNull(), keep_bounds=True
+    )
+    c0 = F.col(_CHUNK)
     # chunk width, re-derived for the fringe bounds below (the chunk index
     # itself comes from the shared _chunk_of)
     width = (F.col("__tp_b") - F.col("__tp_a")) / F.col("__tp_c").cast("double")
@@ -617,34 +575,34 @@ def rolling_two_pass(
     # fringe replication: (chunk, is_ctx) membership array, exploded.
     # tail rows (within |lo| of the chunk's upper edge) also serve chunk+1;
     # head rows (within hi of the lower edge) also serve chunk-1.
-    upper = F.col("__tp_a") + (F.col("__tp_c0") + 1).cast("double") * width
-    lower = F.col("__tp_a") + F.col("__tp_c0").cast("double") * width
+    upper = F.col("__tp_a") + (c0 + 1).cast("double") * width
+    lower = F.col("__tp_a") + c0.cast("double") * width
     members = F.array(
-        F.struct(F.col("__tp_c0").alias("c"), F.lit(0).alias("ctx"))
+        F.struct(c0.alias("c"), F.lit(0).alias("ctx"))
     )
     if lo < 0:
         members = F.when(
-            (F.col("__tp_c0") >= 0)
-            & (F.col("__tp_c0") < F.col("__tp_c") - 1)
+            (c0 >= 0)
+            & (c0 < F.col("__tp_c") - 1)
             & (idxn >= upper - F.lit(-lo)),
             F.concat(
                 members,
-                F.array(F.struct((F.col("__tp_c0") + 1).alias("c"), F.lit(1).alias("ctx"))),
+                F.array(F.struct((c0 + 1).alias("c"), F.lit(1).alias("ctx"))),
             ),
         ).otherwise(members)
     if hi > 0:
         members = F.when(
-            (F.col("__tp_c0") > 0) & (idxn < lower + F.lit(hi)),
+            (c0 > 0) & (idxn < lower + F.lit(hi)),
             F.concat(
                 members,
-                F.array(F.struct((F.col("__tp_c0") - 1).alias("c"), F.lit(1).alias("ctx"))),
+                F.array(F.struct((c0 - 1).alias("c"), F.lit(1).alias("ctx"))),
             ),
         ).otherwise(members)
     big = (
         joined.withColumn("__tp_m", F.explode(members))
         .withColumn(_CHUNK, F.col("__tp_m.c"))
         .withColumn("__tp_ctx", F.col("__tp_m.ctx"))
-        .drop("__tp_m", "__tp_a", "__tp_b", "__tp_c", "__tp_c0")
+        .drop("__tp_m", "__tp_a", "__tp_b", "__tp_c")
     )
 
     if float(lo).is_integer() and float(hi).is_integer():
@@ -662,13 +620,14 @@ def rolling_two_pass(
     out, names = build_exprs(big, w_local)
     out = out.where(F.col("__tp_ctx") == 0)
     res = out.select(*df.columns, *names)
-    res.two_pass_stats = raw  # persist-handle convention
+    res.two_pass_stats = stats  # persist-handle convention
     return res
 
 
 def interpolate_two_pass(
     df: DataFrame,
     by: tuple,
+    stats: DataFrame,
     value: str,
     order_cols: list,
     out: str,
@@ -676,8 +635,6 @@ def interpolate_two_pass(
     missing: Column,
     x: Column,
     rows_per_chunk: int = 2_000_000,
-    max_chunks: int = 4096,
-    stats: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Two-pass execution of :func:`~dask_groupby_spark.core.
     groupby_interpolate` — same linear-interpolation semantics, but the
@@ -693,23 +650,14 @@ def interpolate_two_pass(
     NULL/NaN-axis rows are non-anchors (same gate as the window path) and
     bucket to chunk −1 with NULL results for their missing values.
     """
-    _no_tp_collisions(df)
     keys = list(by)
     v = F.col(value)
     anchor = ~missing & x.isNotNull() & ~F.isnan(x.cast("double"))
     idxn = x.cast("double")
-
-    raw = stats if stats is not None else _chunk_stats(df, keys, idxn).persist()
-    nchunks = F.least(
-        F.lit(max_chunks).cast("long"),
-        F.greatest(F.lit(1).cast("long"), F.ceil(F.col("__tp_n") / F.lit(rows_per_chunk))),
+    big = _assign_chunks(
+        df, keys, stats, _chunk_count(rows_per_chunk), idxn,
+        idxn.isNull() | F.isnan(idxn),
     )
-    # persist sits on the raw aggregate (KB-class; AQE never reuses an
-    # Exchange across consumers) — see scan_two_pass; auto probe slots in
-    stats = raw.withColumn("__tp_c", nchunks).drop("__tp_n")
-    joined = _ns_join(df, stats, keys)
-    chunk = _chunk_of(idxn, sentinel_when=idxn.isNull() | F.isnan(idxn))
-    big = joined.withColumn(_CHUNK, chunk).drop("__tp_a", "__tp_b", "__tp_c")
 
     base = (
         Window.partitionBy(*keys, _CHUNK)
@@ -809,7 +757,7 @@ def interpolate_two_pass(
     # restore the caller's column order with in-place substitution when
     # out == value (the window path's withColumn semantics)
     res = _select_with_out(big, df.columns, out, filled)
-    res.two_pass_stats = raw  # persist-handle convention
+    res.two_pass_stats = stats  # persist-handle convention
     return res
 
 
@@ -916,6 +864,7 @@ def _combine(skip_name: str, ctx, w_local, propagating: bool, result_dt) -> Colu
 def rank_two_pass(
     df: DataFrame,
     by: tuple,
+    stats: DataFrame,
     value: str,
     method: str,
     ascending: bool,
@@ -923,8 +872,6 @@ def rank_two_pass(
     idx_col,
     out_name: str,
     rows_per_chunk: int = 2_000_000,
-    max_chunks: int = 4096,
-    stats: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Two-pass execution of :func:`~dask_groupby_spark.core.groupby_rank`
     — identical pandas-parity semantics, chunked so one huge group spans
@@ -937,35 +884,22 @@ def rank_two_pass(
     ``local + prefix(valid-count)`` (``prefix(distinct-count)`` for dense).
     Missing values (NULL rank, never consuming a rank) ride through in a
     sentinel chunk.  Numeric/timestamp/date values only — the window path
-    handles arbitrary orderable types.
+    handles arbitrary orderable types.  ``stats`` is the pass-0 aggregate
+    over the VALID rows only (NULL/NaN values never consume a rank), row
+    count in ``__tp_nv``.
     """
-    _no_tp_collisions(df)
     keys = list(by)
     v = F.col(value)
     valid = v.isNotNull()
     if isinstance(df.schema[value].dataType, (T.FloatType, T.DoubleType)):
         valid = valid & ~F.isnan(v)
     clean = F.when(valid, v)
-    vnum = _idx_numeric(df, value)  # raises for non-bucketable value types
+    vnum = _idx_numeric(df, value)
     ord_num = vnum if ascending else -vnum
-
-    # valid-filtered stats (NULL/NaN values never consume a rank); the
-    # auto probe passes the SAME aggregate through (count_col="__tp_nv")
-    raw = (
-        stats
-        if stats is not None
-        else _chunk_stats(df.where(valid), keys, ord_num, "__tp_nv").persist()
-    )
-    nchunks = F.least(
-        F.lit(max_chunks).cast("long"),
-        F.greatest(F.lit(1).cast("long"), F.ceil(F.col("__tp_nv") / F.lit(rows_per_chunk))),
-    )
-    stats = raw.withColumn("__tp_c", nchunks)
-
-    joined = _ns_join(df, stats, keys)
     # missing values never consume a rank: sentinel chunk, NULL rank below
-    chunk = _chunk_of(ord_num, sentinel_when=~valid)
-    big = joined.withColumn(_CHUNK, chunk).drop("__tp_a", "__tp_b", "__tp_c")
+    big = _assign_chunks(
+        df, keys, stats, _chunk_count(rows_per_chunk, "__tp_nv"), ord_num, ~valid
+    )
 
     # ---- tiny per-(group, chunk) states ----------------------------------
     states = (
@@ -1022,13 +956,14 @@ def rank_two_pass(
     result_t = "double" if (pct or method == "average") else "long"
     col = F.when(valid, rank.cast(result_t)).otherwise(F.lit(None).cast(result_t))
     res = _select_with_out(big, df.columns, out_name, col)
-    res.two_pass_stats = raw
+    res.two_pass_stats = stats
     return res
 
 
 def ewma_two_pass(
     df: DataFrame,
     by: tuple,
+    stats: DataFrame,
     value: str,
     idx_col: str,
     alpha: float,
@@ -1036,7 +971,6 @@ def ewma_two_pass(
     ignore_na: bool,
     out: str,
     rows_per_chunk: int = 100_000,
-    stats: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Two-pass grouped EWMA — pandas ``ewm(alpha).mean()`` parity without
     routing each group to one task (the applyInPandas tier's bound).
@@ -1058,24 +992,20 @@ def ewma_two_pass(
     previous EWMA forward (``R/Q`` at chunk entry — the β factors cancel
     there too), NULL until the first valid observation, exactly pandas.
     The renormalizing ``adjust=False, ignore_na=False`` mode routes to
-    :func:`_ewma_affine_two_pass` (affine-step composition).
+    :func:`_ewma_affine_two_pass` (affine-step composition).  Needs
+    0 < alpha < 1 (the front end rejects anything else).
     """
     import math
 
     import pandas as pd
 
-    if not (0.0 < alpha < 1.0):
-        raise ValueError(
-            "ewma two_pass needs 0 < alpha < 1 (alpha=1 is plain "
-            "carry-forward of the value — use the default path)"
-        )
     if not adjust and not ignore_na:
         # pandas adjust=False + ignore_na=False is the RENORMALIZING
         # recursion (old_wt resets to 1 after every observation) — an
         # AFFINE, not geometric, recurrence across gaps; it has its own
         # two-pass formulation via affine-step composition.
         return _ewma_affine_two_pass(
-            df, by, value, idx_col, alpha, out, rows_per_chunk, stats=stats
+            df, by, stats, value, idx_col, alpha, out, rows_per_chunk
         )
     beta = 1.0 - alpha
     # raise-bound = 280 decimal digits of double headroom; chunks TARGET
@@ -1084,21 +1014,16 @@ def ewma_two_pass(
     span_bound = max(16, int(280.0 / max(1e-12, -math.log10(beta))))
     rpc = min(rows_per_chunk, max(8, span_bound // 2))
 
-    _no_tp_collisions(df)
     keys = list(by)
     v = F.col(value).cast("double")
     valid = v.isNotNull() & ~F.isnan(v)
     idxn = _idx_numeric(df, idx_col)
-
-    raw = stats if stats is not None else _chunk_stats(df, keys, idxn).persist()
-    # NO max_chunks clamp: the exponent-safety span takes precedence; the
+    # NO MAX_CHUNKS cap: the exponent-safety span takes precedence; the
     # state table grows to n/rpc rows per group, still KB/MB class
-    nchunks = F.greatest(F.lit(1).cast("long"), F.ceil(F.col("__tp_n") / F.lit(rpc)))
-    stats = raw.withColumn("__tp_c", nchunks)
-
-    joined = _ns_join(df, stats, keys)
-    chunk = _chunk_of(idxn, idx_col)
-    big = joined.withColumn(_CHUNK, chunk).drop("__tp_a", "__tp_b", "__tp_c", "__tp_n")
+    big = _assign_chunks(
+        df, keys, stats, _chunk_count(rpc, cap=False), idxn,
+        F.col(idx_col).isNull(),
+    )
 
     base = Window.partitionBy(*keys, _CHUNK).orderBy(F.col(idx_col))
     wb = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1220,20 +1145,19 @@ def ewma_two_pass(
         F.col("__tp_y_prev"),
     )
     res = _select_with_out(big, df.columns, out, y.cast("double"))
-    res.two_pass_stats = raw
+    res.two_pass_stats = stats
     return res
 
 
 def sessionize_two_pass(
     df: DataFrame,
     by: tuple,
+    stats: DataFrame,
     ts_col: str,
     gap: float,
     out: str,
     ts_expr,
     rows_per_chunk: int = 2_000_000,
-    max_chunks: int = 4096,
-    stats: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Two-pass sessionization — same lag → boundary → running-sum
     semantics as :func:`~dask_groupby_spark.operators.selection.sessionize`,
@@ -1247,18 +1171,11 @@ def sessionize_two_pass(
     all SQL, no Arrow step.  NULL timestamps ride the sentinel chunk with
     the window path's exact (per-row new-session) semantics.
     """
-    _no_tp_collisions(df)
     keys = list(by)
     ts = ts_expr
-    raw = stats if stats is not None else _chunk_stats(df, keys, ts).persist()
-    nchunks = F.least(
-        F.lit(max_chunks).cast("long"),
-        F.greatest(F.lit(1).cast("long"), F.ceil(F.col("__tp_n") / F.lit(rows_per_chunk))),
+    big = _assign_chunks(
+        df, keys, stats, _chunk_count(rows_per_chunk), ts, ts.isNull()
     )
-    stats = raw.withColumn("__tp_c", nchunks).drop("__tp_n")
-    joined = _ns_join(df, stats, keys)
-    chunk = _chunk_of(ts, sentinel_when=ts.isNull())
-    big = joined.withColumn(_CHUNK, chunk).drop("__tp_a", "__tp_b", "__tp_c")
 
     base = Window.partitionBy(*keys, _CHUNK).orderBy(F.col(ts_col).asc())
     wb = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1308,19 +1225,19 @@ def sessionize_two_pass(
         - 1
     ).cast("bigint")
     res = _select_with_out(big, df.columns, out, session)
-    res.two_pass_stats = raw
+    res.two_pass_stats = stats
     return res
 
 
 def _ewma_affine_two_pass(
     df: DataFrame,
     by: tuple,
+    stats: DataFrame,
     value: str,
     idx_col: str,
     alpha: float,
     out: str,
     rows_per_chunk: int,
-    stats: Optional[DataFrame] = None,
 ) -> DataFrame:
     """pandas ``adjust=False, ignore_na=False`` EWMA, two-pass.
 
@@ -1348,18 +1265,14 @@ def _ewma_affine_two_pass(
     span_bound = max(16, int(280.0 / max(1e-12, -math.log10(max(beta, 1e-300)))))
     rpc = min(rows_per_chunk, max(8, span_bound // 2))
 
-    _no_tp_collisions(df)
     keys = list(by)
     v = F.col(value).cast("double")
     valid = v.isNotNull() & ~F.isnan(v)
     idxn = _idx_numeric(df, idx_col)
-
-    raw = stats if stats is not None else _chunk_stats(df, keys, idxn).persist()
-    nchunks = F.greatest(F.lit(1).cast("long"), F.ceil(F.col("__tp_n") / F.lit(rpc)))
-    stats = raw.withColumn("__tp_c", nchunks).drop("__tp_n")
-    joined = _ns_join(df, stats, keys)
-    chunk = _chunk_of(idxn, idx_col)
-    big = joined.withColumn(_CHUNK, chunk).drop("__tp_a", "__tp_b", "__tp_c")
+    big = _assign_chunks(
+        df, keys, stats, _chunk_count(rpc, cap=False), idxn,
+        F.col(idx_col).isNull(),
+    )
 
     base = Window.partitionBy(*keys, _CHUNK).orderBy(F.col(idx_col))
     wb = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1461,5 +1374,5 @@ def _ewma_affine_two_pass(
         F.last(F.col("__tp_y"), ignorenulls=True).over(wb), F.col("__tp_y0")
     )
     res = _select_with_out(big, df.columns, out, y.cast("double"))
-    res.two_pass_stats = raw
+    res.two_pass_stats = stats
     return res

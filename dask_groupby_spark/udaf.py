@@ -252,10 +252,6 @@ def ewma(
     recurrence is two-pass-able (0 < alpha < 1, numeric/time idx);
     otherwise the pandas tier.
     """
-    if method not in ("pandas", "two_pass", "auto"):
-        raise ValueError(
-            f"method must be 'pandas', 'two_pass', or 'auto', got {method!r}"
-        )
     # A NULL idx has no position in an order-dependent recurrence: exclude
     # the row from the series and give it a NULL result, UNIFORMLY —
     # enforced here, before tier dispatch, because the tiers used to
@@ -268,30 +264,23 @@ def ewma(
         out, F.lit(None).cast("double")
     )
     work = df.where(F.col(idx_col).isNotNull())
-    pre_stats = None
-    if method == "auto":
-        from .two_pass import _idx_numeric, dispatch_auto
 
-        eligible = 0.0 < alpha < 1.0
-        idxn = None
-        if eligible:
-            try:
-                idxn = _idx_numeric(work, idx_col)
-            except ValueError:
-                eligible = False
-        if eligible:
-            tier, pre_stats = dispatch_auto(
-                work, list(by), idxn, rows_per_chunk
-            )
-            method = "two_pass" if tier == "two_pass" else "pandas"
-        else:
-            method = "pandas"
-    if method == "two_pass":
-        from .two_pass import ewma_two_pass
+    from .two_pass import _idx_numeric, choose_tier, ewma_two_pass
 
+    why_not = None
+    if not (0.0 < alpha < 1.0):
+        why_not = (
+            "ewma two_pass needs 0 < alpha < 1 (alpha=1 is plain "
+            "carry-forward of the value — use the default path)"
+        )
+    tier, stats = choose_tier(
+        method, why_not, work, list(by), lambda: _idx_numeric(work, idx_col),
+        rows_per_chunk, window="pandas",
+    )
+    if tier == "two_pass":
         res = ewma_two_pass(
-            work, by, value, idx_col, alpha, adjust, ignore_na, out,
-            rows_per_chunk=rows_per_chunk, stats=pre_stats,
+            work, by, stats, value, idx_col, alpha, adjust, ignore_na, out,
+            rows_per_chunk=rows_per_chunk,
         )
         final = res.unionByName(null_idx)
         # re-attach the persist handle the union wrapper would otherwise

@@ -8,7 +8,12 @@ Usage:
 
 SPARK_GRAFT_TREE (default: this repo) is prepended to sys.path, so the same
 script can dump plans from an older checkout (the "_before" files) and from
-HEAD (the "_after" files).  Queries default to the full known set.
+HEAD (the "_after" files).  Queries default to the hand-built set below; any
+other name is looked up in that tree's ``__spark_entry__.queries()`` and run
+against SPARK_GRAFT_SF_DIR, so a plan-identity check of contract keys is:
+
+    SPARK_GRAFT_TREE=/path/to/parent python scripts/dump_plans.py OUT before k1 k2
+    python scripts/dump_plans.py OUT after k1 k2
 """
 
 from __future__ import annotations
@@ -175,9 +180,15 @@ def main():
     spark = get_spark("dump_plans")
     spark.sparkContext.setLogLevel("ERROR")
     qs = build_queries(spark)
+    if only:
+        from __spark_entry__ import queries
+
+        contract = queries()
+        qs = {
+            name: qs.get(name) or (lambda fn=contract[name]: fn(spark, SF_DIR))
+            for name in only
+        }
     for name, thunk in qs.items():
-        if only and name not in only:
-            continue
         try:
             txt = _explain_str(thunk())
         except Exception as exc:  # older trees may lack a query

@@ -1,12 +1,12 @@
 """Randomized closing sweep for the r11 probe-economics ladder.
 
-The ladder (`two_pass.dispatch_auto`: metadata row bound -> memo ->
-probe job) changes ONLY plan shape, never values — this sweep asserts
+The ladder (`two_pass.choose_tier`: `__tp_*` collision -> metadata row
+bound -> probe job) changes ONLY plan shape, never values — this sweep asserts
 that on randomized frames across every entry state:
 
 - frames rooted in freshly written parquet (footer-bound path),
 - the same frames cached and materialized (leaf-stats path),
-- join-derived frames (unboundable -> probe/memo path),
+- join-derived frames (unboundable -> probe path),
 - rows_per_chunk above and below the group sizes (window vs two_pass
   winners),
 

@@ -104,7 +104,7 @@ def test_hll_sketch_table_incremental(spark, tmp_path_factory):
         r["grp"]: r["approx_distinct"]
         for r in hll_merge_count(hll_sketch_table(df, "grp", value="uid"), "grp").collect()
     }
-    assert merged == direct  # associative merge == one-shot sketch
+    assert merged == direct  # the estimate is canonical: batching never moves it
 
     exact = {
         r["grp"]: r["n"]

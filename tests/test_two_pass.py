@@ -8,12 +8,20 @@ to the single-pass result, element by element.
 """
 
 import math
+import re
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from dask_groupby_spark import groupby_scan
+from dask_groupby_spark import (
+    groupby_interpolate,
+    groupby_rank,
+    groupby_rolling,
+    groupby_scan,
+)
+from dask_groupby_spark.operators.selection import sessionize
+from dask_groupby_spark.udaf import ewma
 
 SEED = 20260814
 N = 500
@@ -1063,8 +1071,9 @@ def test_two_pass_inf_idx_and_float_keys(spark):
 def test_dispatch_auto_probe_economics(spark, tmp_path):
     """VERDICT r10 #1: the auto-tier probe must not cost a job on the
     window path when a cheaper bound proves no group can exceed
-    rows_per_chunk.  The decision ladder: parquet footers -> cached-
-    relation stats -> memoized probe -> probe job."""
+    rows_per_chunk.  The decision ladder of ``choose_tier``: parquet
+    footers -> cached-relation stats -> probe job.  Nothing is memoized:
+    a repeated call on an unboundable frame probes again."""
     from dask_groupby_spark import two_pass as tp
 
     p = str(tmp_path / "t.parquet")
@@ -1099,27 +1108,28 @@ def test_dispatch_auto_probe_economics(spark, tmp_path):
         calls.append(1)
         return orig(*a, **k)
 
+    def auto(frame, axis, rows_per_chunk):
+        return tp.choose_tier("auto", None, frame, ["k"], lambda: axis, rows_per_chunk)
+
     tp._chunk_stats = spy
     try:
         # footer short-circuit: window tier, zero probe jobs
-        tier, stats = tp.dispatch_auto(df, ["k"], idxn, 2_000_000)
+        tier, stats = auto(df, idxn, 2_000_000)
         assert (tier, stats) == ("window", None) and not calls
-        # un-boundable frame: probe runs once, memo absorbs the repeat
+        # un-boundable frame: every call runs the probe (no memo)
         j = df.join(df.select("id"), on="id")
         jidx = tp._idx_numeric(j, "id")
-        tier, stats = tp.dispatch_auto(j, ["k"], jidx, 2_000_000)
+        tier, stats = auto(j, jidx, 2_000_000)
         assert (tier, stats) == ("window", None) and len(calls) == 1
-        tier, stats = tp.dispatch_auto(j, ["k"], jidx, 2_000_000)
-        assert (tier, stats) == ("window", None) and len(calls) == 1
-        # memo stores the observed max group size: a tighter
-        # rows_per_chunk on the same frame must NOT reuse the window
-        # decision blindly — it re-probes and flips to two_pass
-        tier, stats = tp.dispatch_auto(j, ["k"], jidx, 10)
-        assert tier == "two_pass" and stats is not None
+        tier, stats = auto(j, jidx, 2_000_000)
+        assert (tier, stats) == ("window", None) and len(calls) == 2
+        # a tighter rows_per_chunk on the same frame flips to two_pass
+        tier, stats = auto(j, jidx, 10)
+        assert tier == "two_pass" and stats is not None and len(calls) == 3
         stats.unpersist()
         # small rows_per_chunk on the boundable frame: bound exceeds the
         # chunk size, so the probe runs and picks the scale tier
-        tier, stats = tp.dispatch_auto(df, ["k"], idxn, 10)
+        tier, stats = auto(df, idxn, 10)
         assert tier == "two_pass" and stats is not None
         stats.unpersist()
     finally:
@@ -1171,26 +1181,6 @@ def test_metadata_row_bound_sample_and_unpivot(spark, tmp_path):
     assert tp._metadata_row_bound(up) is None
 
 
-def test_auto_memo_file_rewrite_invalidates(spark, tmp_path):
-    """ADVICE r11 #3: rewriting the underlying parquet mid-session must
-    not replay a memoized window decision — the file signature in the
-    memo key misses and the probe re-runs on the fresh data."""
-    from dask_groupby_spark import two_pass as tp
-
-    p = str(tmp_path / "m.parquet")
-    spark.range(100).selectExpr("id", "id % 3 AS k").write.parquet(p)
-    df1 = spark.read.parquet(p)
-    k1 = tp._memo_key(df1, ["k"], "idx")
-    spark.range(500).selectExpr("id", "id % 3 AS k").write.mode(
-        "overwrite"
-    ).parquet(p)
-    k2 = tp._memo_key(spark.read.parquet(p), ["k"], "idx")
-    assert k1 is not None and k2 is not None and k1 != k2
-    tp._AUTO_MEMO[("sentinel",)] = 1
-    tp.clear_auto_memo()
-    assert not tp._AUTO_MEMO
-
-
 def test_dispatch_auto_bound_conservative_on_empty_relation(spark, tmp_path):
     """An empty parquet frame bounds to 0 rows -> window tier, no probe."""
     from dask_groupby_spark import two_pass as tp
@@ -1200,5 +1190,38 @@ def test_dispatch_auto_bound_conservative_on_empty_relation(spark, tmp_path):
     df = spark.read.parquet(p)
     b = tp._metadata_row_bound(df)
     assert b == 0
-    tier, stats = tp.dispatch_auto(df, ["k"], tp._idx_numeric(df, "id"), 100)
+    idxn = tp._idx_numeric(df, "id")
+    tier, stats = tp.choose_tier("auto", None, df, ["k"], lambda: idxn, 100)
     assert (tier, stats) == ("window", None)
+
+
+_FRONT_ENDS = {
+    # name -> (call(df, tier), tier parameter, single-task tier name)
+    "groupby_scan": (lambda df, m: groupby_scan(
+        df, "label", func="cumsum", value="val", idx_col="idx", method=m),
+        "method", "window"),
+    "groupby_rank": (lambda df, m: groupby_rank(
+        df, "label", value="val", execution=m), "execution", "window"),
+    "groupby_interpolate": (lambda df, m: groupby_interpolate(
+        df, "label", value="val", order_by="idx", method=m),
+        "method", "window"),
+    "groupby_rolling": (lambda df, m: groupby_rolling(
+        df, "label", funcs="sum", value="val", idx_col="idx", window=3,
+        method=m), "method", "window"),
+    "ewma": (lambda df, m: ewma(
+        df, "label", value="val", idx_col="idx", alpha=0.5, method=m),
+        "method", "pandas"),
+    "sessionize": (lambda df, m: sessionize(
+        df, "label", ts_col="idx", gap=1.0, method=m), "method", "window"),
+}
+
+
+@pytest.mark.parametrize("front_end", list(_FRONT_ENDS))
+def test_unknown_tier_rejected(spark, front_end):
+    """Every two-pass front end rejects an unknown tier name up front,
+    naming the accepted values."""
+    call, param, window = _FRONT_ENDS[front_end]
+    df = spark.createDataFrame([(0, 1, 1.0)], "idx bigint, label bigint, val double")
+    msg = f"{param} must be '{window}', 'two_pass', or 'auto', got 'fast'"
+    with pytest.raises(ValueError, match=re.escape(msg)):
+        call(df, "fast")
