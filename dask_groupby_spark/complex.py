@@ -29,7 +29,8 @@ from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from .dtypes import _labels_present
 
 NAN = float("nan")
 
@@ -113,14 +114,7 @@ def groupby_reduce_complex(
     # missing-label exclusion matching core.groupby_reduce step 1: NULL
     # keys AND NaN float keys are dropped (r9 review: the NOT NULL filter
     # alone let NaN keys form an extra group the scalar path drops)
-    key_cond = F.lit(True)
-    for b in by:
-        c = F.col(b)
-        cond = c.isNotNull()
-        if isinstance(df.schema[b].dataType, (T.FloatType, T.DoubleType)):
-            cond = cond & ~F.isnan(c)
-        key_cond = key_cond & cond
-    keyed = df.where(key_cond)
+    keyed = df.where(_labels_present(df, by))
 
     if base == "median":
         return _complex_median(

@@ -58,10 +58,7 @@ def _make_ctx(
         v = v.cast("long")
         dt = T.LongType()
     is_float = dt_rules.is_float(dt)
-    if is_float:
-        missing = v.isNull() | F.isnan(v)
-    else:
-        missing = v.isNull()
+    missing = dt_rules._missing(v, dt)
     clean = F.when(~missing, v)
     return Ctx(
         v=v,
@@ -269,14 +266,7 @@ def groupby_reduce(
     #    into the scan where possible.
     key_cols = [expr for (_, expr, _, _) in keys]
     keyed = work.select(*key_cols, *[c for c in work.columns if c not in key_names])
-    cond = None
-    for name, _, _, _ in keys:
-        k = F.col(name)
-        knn = k.isNotNull()
-        if isinstance(keyed.schema[name].dataType, (T.FloatType, T.DoubleType)):
-            knn = knn & ~F.isnan(k)
-        cond = knn if cond is None else (cond & knn)
-    keyed = keyed.where(cond)
+    keyed = keyed.where(dt_rules._labels_present(keyed, key_names))
 
     # 2. aggregate
     result_dt = spec.result_type(ctx.dt, kw) if dtype is None else T._parse_datatype_string(dtype)
@@ -518,13 +508,7 @@ def groupby_scan(
     result_dt = spec.result_type(ctx.dt, kw) if dtype is None else T._parse_datatype_string(dtype)
 
     # missing-label rows: result is NA (excluded from any group's scan)
-    label_ok = None
-    for b in by:
-        k = F.col(b)
-        ok = k.isNotNull()
-        if isinstance(work.schema[b].dataType, (T.FloatType, T.DoubleType)):
-            ok = ok & ~F.isnan(k)
-        label_ok = ok if label_ok is None else (label_ok & ok)
+    label_ok = dt_rules._labels_present(work, by)
 
     from .two_pass import TWO_PASS_FUNCS, _idx_numeric, choose_tier, scan_two_pass
 
@@ -633,9 +617,7 @@ def groupby_rank(
         raise ValueError('method="first" requires idx_col= (appearance order)')
     out_name = alias or "rank"
     v = F.col(value)
-    valid = v.isNotNull()
-    if isinstance(df.schema[value].dataType, (T.FloatType, T.DoubleType)):
-        valid = valid & ~F.isnan(v)
+    valid = ~dt_rules._missing(v, df.schema[value].dataType)
 
     from .two_pass import _idx_numeric, choose_tier, rank_two_pass
 
@@ -738,9 +720,7 @@ def groupby_fill_stat(
         raise ValueError(f"func must be one of {sorted(builders)}")
     out = out or value
     v = F.col(value)
-    missing = v.isNull()
-    if isinstance(df.schema[value].dataType, (T.FloatType, T.DoubleType)):
-        missing = missing | F.isnan(v)
+    missing = dt_rules._missing(v, df.schema[value].dataType)
     clean = F.when(~missing, v)
     if method == "join":
         joined = _group_stat_join(
@@ -806,9 +786,7 @@ def groupby_winsorize(
         raise ValueError("need 0 <= lower <= upper <= 1")
     out = out or value
     v = F.col(value)
-    missing = v.isNull()
-    if isinstance(df.schema[value].dataType, (T.FloatType, T.DoubleType)):
-        missing = missing | F.isnan(v)
+    missing = dt_rules._missing(v, df.schema[value].dataType)
     clean = F.when(~missing, v)
     if method == "join":
         joined = _group_stat_join(
@@ -888,9 +866,7 @@ def groupby_interpolate(
             "temporaries — rename them first"
         )
     v = F.col(value)
-    missing = v.isNull()
-    if isinstance(df.schema[value].dataType, (T.FloatType, T.DoubleType)):
-        missing = missing | F.isnan(v)
+    missing = dt_rules._missing(v, df.schema[value].dataType)
     x = time_to_seconds(df, order_cols[0])
     if limit is not None and limit < 1:
         raise ValueError("limit must be >= 1")
@@ -975,14 +951,7 @@ def groupby_agg(
     key_cols = [expr for (_, expr, _, _) in keys]
 
     keyed = df.select(*key_cols, *[c for c in df.columns if c not in key_names])
-    cond = None
-    for name, _, _, _ in keys:
-        k = F.col(name)
-        ok = k.isNotNull()
-        if isinstance(keyed.schema[name].dataType, (T.FloatType, T.DoubleType)):
-            ok = ok & ~F.isnan(k)
-        cond = ok if cond is None else (cond & ok)
-    keyed = keyed.where(cond)
+    keyed = keyed.where(dt_rules._labels_present(keyed, key_names))
 
     agg_cols = []
     casts = {}

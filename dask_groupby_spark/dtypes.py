@@ -133,6 +133,44 @@ def fill_lit(fill_value, dt: T.DataType) -> F.Column:
     return F.lit(fill_value).cast(dt)
 
 
+def _missing(c: F.Column, dt: T.DataType) -> F.Column:
+    """The missing-value test: NULL, or NaN for float/double ``dt``.  NaN
+    and NULL are both missing; ``~_missing`` is the valid-row test."""
+    if is_float(dt):
+        return c.isNull() | F.isnan(c)
+    return c.isNull()
+
+
+def _labels_present(df, keys) -> F.Column:
+    """The missing-label filter: every key of ``keys`` is present.  A row
+    whose group label is missing belongs to no group and is left out of
+    the result (ref: flox core.py:846-849, label code -1)."""
+    cond = F.lit(True)
+    for k in keys:
+        cond = cond & ~_missing(F.col(k), df.schema[k].dataType)
+    return cond
+
+
+def _nan_round_trip(df, cols, prefix: str, run):
+    """Carry NaN across an Arrow/pandas UDF.  The boundary renders a float
+    NaN as pandas' missing sentinel and hands it back as SQL NULL, so each
+    float/double column of ``cols`` travels with a boolean ``isnan`` marker
+    named ``{prefix}{i}`` and gets its NaN back afterwards.
+
+    ``run(src, marks)`` applies the UDF to ``src`` (``df`` plus the
+    markers); its output schema must carry every marker of ``marks``
+    ({column: marker}) as a boolean column.  IsNaN is false on NULL, so
+    NULL stays NULL."""
+    dts = {c: df.schema[c].dataType for c in cols}
+    marks = {c: f"{prefix}{i}" for i, c in enumerate(c for c in cols if is_float(dts[c]))}
+    if not marks:
+        return run(df, marks)
+    out = run(df.withColumns({m: F.isnan(F.col(c)) for c, m in marks.items()}), marks)
+    for c, m in marks.items():
+        out = out.withColumn(c, F.when(F.col(m), F.lit(NAN)).otherwise(F.col(c)).cast(dts[c]))
+    return out.drop(*marks.values())
+
+
 def needs_na_promotion(fill_value, dt: T.DataType) -> bool:
     """True when filling this dtype with ``fill_value`` (or dtype-NA) cannot be
     represented → result must be promoted to DOUBLE (ref: core.py:707-711)."""

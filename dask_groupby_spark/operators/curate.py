@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..dtypes import _nan_round_trip
 from .dedup import _hash_domain, _hasher, _shingle_rows
 from .text import add_text_features
 
@@ -401,16 +402,20 @@ def pack_sequences(
     through one Arrow ``applyInPandas`` pass.  At scale, groups (source
     shards) partition the work; packing never needs to cross groups, so
     this is one shuffle on the group keys and O(group) sequential work —
-    the same contract as the reference's blockwise-only reductions.
+    the same contract as the reference's blockwise-only reductions.  Float
+    columns keep their NaN across the Arrow pass (``__ps_nan_*`` markers).
     """
     import pandas as pd
 
     if capacity <= 0:
         raise ValueError("capacity must be positive")
+    clash = [c for c in df.columns if c.startswith("__ps_nan_")]
+    if clash:
+        raise ValueError(
+            f"input column(s) {clash} collide with the internal __ps_nan_* "
+            "namespace — rename them first"
+        )
     from pyspark.sql import types as T
-
-    # copy — StructType.add would mutate df's own schema object in place
-    out_schema = T.StructType(df.schema.fields + [T.StructField(bin_col, T.LongType())])
 
     sort_cols = [order_col] + ([tiebreak] if tiebreak else [])
 
@@ -429,7 +434,14 @@ def pack_sequences(
         pdf[bin_col] = pd.Series(bins, dtype="int64")
         return pdf
 
-    return df.groupBy(*by).applyInPandas(pack, schema=out_schema)
+    def run(src: DataFrame, marks: dict) -> DataFrame:
+        # copy — StructType.add would mutate src's own schema object in place
+        out_schema = T.StructType(src.schema.fields + [T.StructField(bin_col, T.LongType())])
+        return src.groupBy(*by).applyInPandas(pack, schema=out_schema)
+
+    # every column rides through Arrow, so NaN keys and passthrough
+    # values alike would come back NULL without the round trip
+    return _nan_round_trip(df, df.columns, "__ps_nan_", run)
 
 
 #: Redaction patterns restricted to the RE2 ∩ Java-regex common subset

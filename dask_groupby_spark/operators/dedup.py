@@ -739,6 +739,36 @@ def simhash(
     return agg.select("id", sig.cast("bigint").alias("simhash"))
 
 
+def _driver_roots(edges: DataFrame) -> tuple:
+    """Driver union-find over a persisted (src, dst) edge frame, which it
+    collects (Arrow batch transfer, not Py4J rows) and unpersists.
+    Returns (vertices, their roots).  Union by min keeps each root the
+    component minimum, so labels match the distributed min-label result
+    exactly."""
+    pdf = edges.toPandas()
+    edges.unpersist()
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:  # path compression
+            parent[x], x = r, parent[x]
+        return r
+
+    for s, d in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
+        parent.setdefault(s, s)
+        parent.setdefault(d, d)
+        rs, rd = find(s), find(d)
+        if rs != rd:
+            if rd < rs:
+                rs, rd = rd, rs
+            parent[rd] = rs
+    verts = list(parent)
+    return verts, [find(v) for v in verts]
+
+
 def duplicate_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -823,29 +853,7 @@ def duplicate_clusters(
     if max_driver_edges and n_edges <= max_driver_edges:
         import pandas as pd
 
-        pdf = edges.toPandas()  # Arrow batch transfer, not Py4J rows
-        edges.unpersist()
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        for s, d in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
-            parent.setdefault(s, s)
-            parent.setdefault(d, d)
-            rs, rd = find(s), find(d)
-            if rs != rd:
-                # union by min keeps the root the component minimum, so
-                # labels match the distributed min-label result exactly
-                if rd < rs:
-                    rs, rd = rd, rs
-                parent[rd] = rs
-        verts = list(parent)
+        verts, roots = _driver_roots(edges)
         # the explode's F.array(struct(a,b), struct(b,a)) coerced src/dst to
         # their COMMON wider type — use it for both output columns, exactly
         # like the distributed tier's union-unified label type (r7 review:
@@ -855,9 +863,7 @@ def duplicate_clusters(
         schema = T.StructType(
             [T.StructField(out_id, dtype), T.StructField(out_cluster, dtype)]
         )
-        out_pdf = pd.DataFrame(
-            {out_id: verts, out_cluster: [find(v) for v in verts]}
-        )
+        out_pdf = pd.DataFrame({out_id: verts, out_cluster: roots})
         return pairs.sparkSession.createDataFrame(out_pdf, schema)
     # ------------------------------------------------------------------
     # r13: ONE star-contraction pass before any label-propagation round
@@ -920,27 +926,7 @@ def duplicate_clusters(
     if max_driver_edges and n_c <= max_driver_edges:
         import pandas as pd
 
-        pdf = contracted.toPandas()
-        contracted.unpersist()
-        parent = {}
-
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:
-                parent[x], x = r, parent[x]
-            return r
-
-        for s, d in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
-            parent.setdefault(s, s)
-            parent.setdefault(d, d)
-            rs, rd = find(s), find(d)
-            if rs != rd:
-                if rd < rs:
-                    rs, rd = rd, rs
-                parent[rd] = rs
-        verts = list(parent)
+        verts, lbls = _driver_roots(contracted)
         schema = T.StructType(
             [
                 T.StructField("v", m.schema["mlbl"].dataType),
@@ -948,7 +934,7 @@ def duplicate_clusters(
             ]
         )
         roots = pairs.sparkSession.createDataFrame(
-            pd.DataFrame({"v": verts, "lbl": [find(v) for v in verts]}), schema
+            pd.DataFrame({"v": verts, "lbl": lbls}), schema
         )
         return _finalize(roots)
     p = max(1, min(contracted.rdd.getNumPartitions(), n_c // 1_000_000 + 1))

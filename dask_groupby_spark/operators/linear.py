@@ -29,6 +29,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..core import nullsafe_join
+from ..dtypes import _nan_round_trip
+
 __all__ = [
     "linreg_fit",
     "grouped_linreg",
@@ -74,18 +77,6 @@ def _unpack_normal_eq(row, d: int):
             A[i, j] = A[j, i] = row[f"xx_{i}_{j}"]
     b = np.array([row[f"xy_{i}"] for i in range(d)])
     return A, b
-
-
-def _nullsafe_join(left, right, by_list, how="inner", broadcast=False,
-                   prefix="__ns_by"):
-    """Delegates to :func:`dask_groupby_spark.core.nullsafe_join` — the
-    ONE shared NULL-group-preserving join (r9 meta-review consolidated
-    this module's copy and two_pass's into core)."""
-    from ..core import nullsafe_join
-
-    return nullsafe_join(
-        left, right, by_list, how=how, broadcast=broadcast, prefix=prefix
-    )
 
 
 def _clean_rows(df: DataFrame, features: list[str], label: str) -> DataFrame:
@@ -176,72 +167,56 @@ def grouped_linreg(
         *_ols_aggs(xs, y, d)
     )
 
-    # NaN float group keys would come back from the Arrow boundary as SQL
-    # NULL (colliding with a real NULL-key group) — same round-trip class
-    # the ewma tiers fix; float keys travel with an isnan marker (r10)
-    nan_keys = [
-        c for c in by_list
-        if isinstance(stats.schema[c].dataType, (T.FloatType, T.DoubleType))
-    ]
-    marks = {c: f"__lr_nan_{i}" for i, c in enumerate(nan_keys)}
-    if marks:
-        stats = stats.withColumns(
-            {m: F.isnan(F.col(c)) for c, m in marks.items()}
-        )
-
-    schema = T.StructType(
-        [stats.schema[c] for c in by_list]
-        + [T.StructField(m, T.BooleanType(), False) for m in marks.values()]
-        + [
-            T.StructField("feature", T.StringType(), False),
-            T.StructField("weight", T.DoubleType(), True),
-            T.StructField("n", T.LongType(), False),
-        ]
-    )
     pen = np.diag(
         [0.0 if (add_bias and i == d - 1) else float(l2) for i in range(d)]
     )
 
-    mark_cols = list(marks.values())
-
-    def solve(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out_keys = {c: [] for c in by_list + mark_cols}
-            feats, weights, ns = [], [], []
-            for _, row in pdf.iterrows():
-                A, b = _unpack_normal_eq(row, d)
-                try:
-                    w = np.linalg.solve(A + pen, b)
-                    if not np.all(np.isfinite(w)) or row["n"] <= d:
-                        raise np.linalg.LinAlgError
-                    wlist = [float(v) for v in w]
-                except np.linalg.LinAlgError:
-                    wlist = [None] * d
-                for name, wv in zip(names, wlist):
-                    for c in by_list:
-                        out_keys[c].append(row[c])
-                    for m in mark_cols:
-                        out_keys[m].append(bool(row[m]))
-                    feats.append(name)
-                    weights.append(wv)
-                    ns.append(int(row["n"]))
-            out = dict(out_keys)
-            out["feature"] = feats
-            out["weight"] = weights
-            out["n"] = ns
-            yield pd.DataFrame(out)
-
-    res = stats.mapInPandas(solve, schema=schema)
-    for c, m in marks.items():
-        res = res.withColumn(
-            c,
-            F.when(F.col(m), F.lit(float("nan")))
-            .otherwise(F.col(c))
-            .cast(stats.schema[c].dataType),
+    def run(src: DataFrame, marks: dict) -> DataFrame:
+        mark_cols = list(marks.values())
+        schema = T.StructType(
+            [src.schema[c] for c in by_list]
+            + [T.StructField(m, T.BooleanType(), False) for m in mark_cols]
+            + [
+                T.StructField("feature", T.StringType(), False),
+                T.StructField("weight", T.DoubleType(), True),
+                T.StructField("n", T.LongType(), False),
+            ]
         )
-    return res.drop(*marks.values())
+
+        def solve(batches):
+            for pdf in batches:
+                if not len(pdf):
+                    continue
+                out_keys = {c: [] for c in by_list + mark_cols}
+                feats, weights, ns = [], [], []
+                for _, row in pdf.iterrows():
+                    A, b = _unpack_normal_eq(row, d)
+                    try:
+                        w = np.linalg.solve(A + pen, b)
+                        if not np.all(np.isfinite(w)) or row["n"] <= d:
+                            raise np.linalg.LinAlgError
+                        wlist = [float(v) for v in w]
+                    except np.linalg.LinAlgError:
+                        wlist = [None] * d
+                    for name, wv in zip(names, wlist):
+                        for c in by_list:
+                            out_keys[c].append(row[c])
+                        for m in mark_cols:
+                            out_keys[m].append(bool(row[m]))
+                        feats.append(name)
+                        weights.append(wv)
+                        ns.append(int(row["n"]))
+                out = dict(out_keys)
+                out["feature"] = feats
+                out["weight"] = weights
+                out["n"] = ns
+                yield pd.DataFrame(out)
+
+        return src.mapInPandas(solve, schema=schema)
+
+    # NaN float group keys would come back from the Arrow boundary as SQL
+    # NULL, colliding with a real NULL-key group (r10)
+    return _nan_round_trip(stats, by_list, "__lr_nan_", run)
 
 
 def logreg_train(
@@ -366,7 +341,7 @@ def grouped_logreg(
             # null-safe equality per key column: NULL groups train like any
             # other (GROUP BY kept their counts row; a plain equi-join
             # would silently drop them after the first step)
-            joined = _nullsafe_join(
+            joined = nullsafe_join(
                 clean, w, by_list, broadcast=broadcast_weights,
                 prefix="__lw_by",
             )
@@ -382,7 +357,7 @@ def grouped_logreg(
                 ]
             )
             w = (
-                _nullsafe_join(w, grads, by_list, prefix="__lg_by")
+                nullsafe_join(w, grads, by_list, prefix="__lg_by")
                 .select(
                     *by_list,
                     "__n",
@@ -453,7 +428,7 @@ def grouped_linear_predict(
         wide = wide.withColumnRenamed(f, wf)
     # null-safe join: a NULL group's model (grouped_linreg/grouped_logreg
     # emit one under GROUP BY semantics) must score its own rows
-    joined = _nullsafe_join(
+    joined = nullsafe_join(
         df, wide.select(*by_list, *[renames[f] for f in feats]),
         by_list, how="left", broadcast=True, prefix="__m_by",
     )
@@ -552,7 +527,7 @@ def target_encode(
     # a plain equi-join would strand those rows at n=0 and feed the LOO
     # formula garbage ((0 − y + m·p)/(m − 1)) instead of their group's
     # estimate
-    j = _nullsafe_join(
+    j = nullsafe_join(
         df, stats, by_list, how="left", broadcast=True, prefix="__te_by"
     )
     n = F.coalesce(F.col("__te_n"), F.lit(0)).cast("double")

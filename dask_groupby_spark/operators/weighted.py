@@ -11,15 +11,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from ..dtypes import _missing
 
 
 def _valid(df: DataFrame, col: str) -> Column:
-    c = F.col(col)
-    ok = c.isNotNull()
-    if isinstance(df.schema[col].dataType, (T.FloatType, T.DoubleType)):
-        ok = ok & ~F.isnan(c)
-    return ok
+    return ~_missing(F.col(col), df.schema[col].dataType)
 
 
 def groupby_weighted(
@@ -316,12 +313,10 @@ def time_weighted_mean(
 
     from ..dtypes import time_to_seconds
 
-    ok = _valid(df, value) & F.col(ts_col).isNotNull()
     # a NaN timestamp sorts LAST, so letting it through poisons the whole
     # group: the previous row's lead-duration becomes NaN and the duration
     # sum with it (r9 review) — exclude it like every other missing value
-    if isinstance(df.schema[ts_col].dataType, (T.FloatType, T.DoubleType)):
-        ok = ok & ~F.isnan(F.col(ts_col))
+    ok = _valid(df, value) & _valid(df, ts_col)
     base = df.where(ok).select(
         *by,
         time_to_seconds(df, ts_col).alias("__t"),

@@ -21,17 +21,15 @@ from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from .dtypes import _missing
 
 _PIVOT_FUNCS = ("count", "nansum", "nanmean", "nanmin", "nanmax")
 
 
 def _clean(df: DataFrame, value: str) -> Column:
     v = F.col(value)
-    ok = v.isNotNull()
-    if isinstance(df.schema[value].dataType, (T.FloatType, T.DoubleType)):
-        ok = ok & ~F.isnan(v)
-    return F.when(ok, v)
+    return F.when(~_missing(v, df.schema[value].dataType), v)
 
 
 def groupby_pivot(

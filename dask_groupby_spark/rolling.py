@@ -28,7 +28,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dtypes import NAN
+from .dtypes import NAN, _missing
 
 ROLLING_FUNCS = ("count", "sum", "mean", "min", "max", "var", "std")
 
@@ -140,8 +140,7 @@ def groupby_rolling(
         )
 
     v = F.col(value)
-    dt = df.schema[value].dataType.simpleString()
-    missing = v.isNull() | (F.isnan(v) if dt in ("float", "double") else F.lit(False))
+    missing = _missing(v, df.schema[value].dataType)
     clean = F.when(~missing, v.cast("double"))
 
     def apply_frames(frame_df: DataFrame, w, w_shift) -> tuple:

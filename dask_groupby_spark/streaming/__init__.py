@@ -20,7 +20,7 @@ Arrow/pandas boundary, which renders a float NaN as pandas' missing sentinel
 and hands it back as SQL NULL — a NaN FLOAT stream key therefore arrives
 NULL in the OUTPUT key column (the state itself is keyed correctly).  The
 batch tiers carry isnan markers to restore such keys
-(``two_pass._nan_safe_offsets``); the stateful streaming path does not —
+(``dtypes._nan_round_trip``); the stateful streaming path does not —
 key streams on float columns that can be NaN should cast the key to
 string/long first.  All in-repo stream keys are ids/strings.
 """
@@ -39,7 +39,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..aggregations import AGGREGATIONS
 from ..core import _make_ctx
-from ..dtypes import normalize_time
+from ..dtypes import _labels_present, normalize_time
 
 # Registry functions whose Catalyst aggregate cannot run under a streaming
 # state store even though they pass the grouped_build/needs_idx gate:
@@ -68,18 +68,6 @@ def _stream_spec(stream: DataFrame, func: str, value: str, kw=None):
     return spec, ctx
 
 
-def _drop_missing_keys(stream: DataFrame, by: tuple) -> DataFrame:
-    """flox NaN-label exclusion, streaming edition: batch groupby_reduce
-    drops rows whose group label is NULL/NaN (core.py step 1) — the
-    streaming analogs must agree on feeds containing missing keys."""
-    for b in by:
-        cond = F.col(b).isNotNull()
-        if isinstance(stream.schema[b].dataType, (T.FloatType, T.DoubleType)):
-            cond = cond & ~F.isnan(F.col(b))
-        stream = stream.filter(cond)
-    return stream
-
-
 def windowed_reduce(
     stream: DataFrame,
     *by: str,
@@ -101,7 +89,7 @@ def windowed_reduce(
     # watermarks require TIMESTAMP — NTZ event time throws
     # EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE (plain projection, streaming-safe)
     stream = normalize_time(stream, ts_col)
-    stream = _drop_missing_keys(stream, by)
+    stream = stream.where(_labels_present(stream, by))
     spec, ctx = _stream_spec(stream, func, value)
     win = F.window(F.col(ts_col), window, slide) if slide else F.window(F.col(ts_col), window)
     return (
@@ -139,7 +127,7 @@ def windowed_agg(
     :func:`windowed_reduce`.
     """
     stream = normalize_time(stream, ts_col)
-    stream = _drop_missing_keys(stream, by)
+    stream = stream.where(_labels_present(stream, by))
     aggs = []
     for item in funcs:
         name, vcol, out = item[0], item[1], item[2]
@@ -280,7 +268,7 @@ def session_reduce(
     """
     out = alias or func
     stream = normalize_time(stream, ts_col)
-    stream = _drop_missing_keys(stream, by)
+    stream = stream.where(_labels_present(stream, by))
     spec, ctx = _stream_spec(stream, func, value)
     return (
         stream.withWatermark(ts_col, watermark)

@@ -97,29 +97,20 @@ def _ns_join(left: DataFrame, right: DataFrame, keys: list) -> DataFrame:
 
 
 def _nan_safe_offsets(
-    states: DataFrame, keys: list, dtypes: dict, recur, out_schema: str
+    states: DataFrame, keys: list, recur, out_schema: str
 ) -> DataFrame:
-    """``groupBy(keys).applyInPandas(recur)`` with NaN-key round-trip
-    protection.  The Arrow/pandas boundary renders a float NaN group key
-    as pandas' missing sentinel and hands it back as SQL NULL — the
-    null-safe offsets join then misses every NaN-keyed group and the
-    inter-chunk carry silently restarts (r10 audit).  Float keys travel
-    with a boolean ``isnan`` marker (named ``__tpnan{i}`` — outside the
-    ``__tp_`` prefix so the recur functions' passthrough dict carries
-    them automatically) and are restored after the UDF."""
-    nan_keys = [k for k in keys if dtypes[k] in ("float", "double")]
-    if not nan_keys:
-        return states.groupBy(*keys).applyInPandas(recur, schema=out_schema)
-    marks = {k: f"__tpnan{i}" for i, k in enumerate(nan_keys)}
-    src = states.withColumns({m: F.isnan(F.col(k)) for k, m in marks.items()})
-    schema = out_schema + "".join(f", `{m}` boolean" for m in marks.values())
-    out = src.groupBy(*keys).applyInPandas(recur, schema=schema)
-    for k, m in marks.items():
-        out = out.withColumn(
-            k,
-            F.when(F.col(m), F.lit(float("nan"))).otherwise(F.col(k)).cast(dtypes[k]),
-        )
-    return out.drop(*marks.values())
+    """``groupBy(keys).applyInPandas(recur)`` with NaN keys carried across
+    Arrow (``dtypes._nan_round_trip``): a NaN group key coming back as NULL
+    would miss the null-safe offsets join, and the inter-chunk carry would
+    silently restart (r10 audit).  The markers are named
+    ``__tpnan{i}`` — outside the ``__tp_`` prefix, so the recur functions'
+    passthrough dict carries them automatically."""
+
+    def run(src, marks):
+        schema = out_schema + "".join(f", `{m}` boolean" for m in marks.values())
+        return src.groupBy(*keys).applyInPandas(recur, schema=schema)
+
+    return dt_rules._nan_round_trip(states, keys, "__tpnan", run)
 
 
 def _chunk_of(idxn, sentinel_when: Column) -> Column:
@@ -890,9 +881,7 @@ def rank_two_pass(
     """
     keys = list(by)
     v = F.col(value)
-    valid = v.isNotNull()
-    if isinstance(df.schema[value].dataType, (T.FloatType, T.DoubleType)):
-        valid = valid & ~F.isnan(v)
+    valid = ~dt_rules._missing(v, df.schema[value].dataType)
     clean = F.when(valid, v)
     vnum = _idx_numeric(df, value)
     ord_num = vnum if ascending else -vnum
@@ -1121,9 +1110,7 @@ def ewma_two_pass(
             pre_valid += int(r["__tp_nv"])
         return pd.DataFrame(out_rows)
 
-    offsets = _nan_safe_offsets(
-        chunk_states, keys, dict(df.dtypes), recur, out_schema
-    )
+    offsets = _nan_safe_offsets(chunk_states, keys, recur, out_schema)
 
     # ---- recombine ---------------------------------------------------------
     big = _ns_join(big, offsets, keys + [_CHUNK])
@@ -1360,7 +1347,7 @@ def _ewma_affine_two_pass(
             pre_valid += nv
         return pd.DataFrame(rows_out)
 
-    offsets = _nan_safe_offsets(states, keys, dict(df.dtypes), recur, out_schema)
+    offsets = _nan_safe_offsets(states, keys, recur, out_schema)
     big = _ns_join(big, offsets, keys + [_CHUNK])
 
     first_global = F.col("__tp_rf") + F.coalesce(F.col("__tp_prer"), F.lit(0).cast("long"))

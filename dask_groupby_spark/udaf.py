@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .aggregations import Aggregation, Scan
+from .dtypes import _nan_round_trip
 
 __all__ = [
     "Aggregation",
@@ -106,37 +107,29 @@ def groupby_apply_reduce(
     """
     dt = dict(df.dtypes)
     key_schema = ", ".join(f"`{b}` {dt[b]}" for b in by)
-    # NaN keys: the Arrow boundary would hand a NaN group key back as SQL
-    # NULL (see groupby_apply_transform) — float keys travel with a
-    # boolean isnan marker and are restored after the UDF
-    nan_keys = [b for b in by if dt[b] in ("float", "double")]
     clash = [c for c in df.columns if c.startswith("__agr_")]
     if clash:
         raise ValueError(
             f"input column(s) {clash} collide with the internal __agr_* "
             "namespace; rename them before groupby_apply_reduce"
         )
-    marks = {b: f"__agr_nan_{i}" for i, b in enumerate(nan_keys)}
-    mark_schema = "".join(f", `{m}` boolean" for m in marks.values())
-    # no keys = one global group: the schema must not lead with a comma
-    full_schema = f"{key_schema}{mark_schema}, {output_schema}" if by else output_schema
 
-    def apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = {b: pdf[b].iloc[0] for b in by}
-        for b, m in marks.items():
-            keys[m] = bool(pdf[m].iloc[0])
-        out = reduce_fn(pdf[list(value_cols)])
-        return pd.DataFrame([{**keys, **out}])
+    def run(src: DataFrame, marks: dict) -> DataFrame:
+        mark_schema = "".join(f", `{m}` boolean" for m in marks.values())
+        # no keys = one global group: the schema must not lead with a comma
+        full_schema = f"{key_schema}{mark_schema}, {output_schema}" if by else output_schema
 
-    src = df
-    if marks:
-        src = df.withColumns({m: F.isnan(F.col(b)) for b, m in marks.items()})
-    out = src.groupBy(*by).applyInPandas(apply, schema=full_schema)
-    for b, m in marks.items():
-        out = out.withColumn(
-            b, F.when(F.col(m), F.lit(float("nan"))).otherwise(F.col(b)).cast(dt[b])
-        )
-    out = out.drop(*marks.values())
+        def apply(pdf: pd.DataFrame) -> pd.DataFrame:
+            keys = {b: pdf[b].iloc[0] for b in by}
+            for m in marks.values():
+                keys[m] = bool(pdf[m].iloc[0])
+            out = reduce_fn(pdf[list(value_cols)])
+            return pd.DataFrame([{**keys, **out}])
+
+        return src.groupBy(*by).applyInPandas(apply, schema=full_schema)
+
+    # NaN group keys would come back from Arrow as SQL NULL
+    out = _nan_round_trip(df, by, "__agr_nan_", run)
     if sort and by:
         out = out.orderBy(*by)
     return out
@@ -179,8 +172,6 @@ def groupby_apply_transform(
             list(by) + [idx_col] + [c for c in value_cols if c not in by]
         )
     )
-    nan_cols = [c for c in carried if dt[c] in ("float", "double")]
-    marks = {c: f"__agt_nan_{i}" for i, c in enumerate(nan_cols)}
     clash = [c for c in df.columns if c.startswith("__agt_")]
     if clash:
         raise ValueError(
@@ -188,30 +179,23 @@ def groupby_apply_transform(
             "namespace — rename them first"
         )
     carry_schema = ", ".join(f"`{c}` {dt[c]}" for c in carried)
-    mark_schema = "".join(f", `{m}` boolean" for m in marks.values())
-    full_schema = f"{carry_schema}{mark_schema}, {output_schema}"
 
-    def apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(idx_col, kind="mergesort")
-        out = transform_fn(pdf[list(value_cols)])
-        res = pdf[carried + list(marks.values())].reset_index(drop=True)
-        for name, col in out.items():
-            res[name] = col.reset_index(drop=True) if hasattr(col, "reset_index") else col
-        return res
+    def run(src: DataFrame, marks: dict) -> DataFrame:
+        mark_schema = "".join(f", `{m}` boolean" for m in marks.values())
+        full_schema = f"{carry_schema}{mark_schema}, {output_schema}"
+        kept = carried + list(marks.values())
 
-    src = df.select(
-        *dict.fromkeys(carried),
-        *[
-            F.isnan(F.col(c)).alias(m) for c, m in marks.items()
-        ],  # IsNaN is false on NULL, so only true NaNs restore below
-    )
-    res = src.groupBy(*by).applyInPandas(apply, schema=full_schema)
-    for c, m in marks.items():
-        res = res.withColumn(
-            c,
-            F.when(F.col(m), F.lit(float("nan"))).otherwise(F.col(c)).cast(dt[c]),
-        )
-    return res.drop(*marks.values())
+        def apply(pdf: pd.DataFrame) -> pd.DataFrame:
+            pdf = pdf.sort_values(idx_col, kind="mergesort")
+            out = transform_fn(pdf[list(value_cols)])
+            res = pdf[kept].reset_index(drop=True)
+            for name, col in out.items():
+                res[name] = col.reset_index(drop=True) if hasattr(col, "reset_index") else col
+            return res
+
+        return src.groupBy(*by).applyInPandas(apply, schema=full_schema)
+
+    return _nan_round_trip(df.select(*carried), carried, "__agt_nan_", run)
 
 
 def ewma(

@@ -849,6 +849,41 @@ def test_pack_sequences_vs_python_reference(spark):
         pack_sequences(df, "g", size_col="sz", order_col="doc_id", capacity=0)
 
 
+def test_pack_sequences_keeps_nan(spark):
+    """Every column crosses the Arrow boundary: NaN in a passthrough double
+    column and in a double group key comes back NaN, and NULL stays NULL
+    (in the NULL-key group too)."""
+    import math
+
+    from dask_groupby_spark.operators.curate import pack_sequences
+
+    nan = float("nan")
+    rows = [
+        (0, "a", 1.0, nan, 10),
+        (1, "a", nan, 2.0, 10),
+        (2, None, nan, nan, 10),
+        (3, None, None, None, 10),
+        (4, "b", None, 3.0, 10),
+        (5, "b", 1.0, None, 10),
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id bigint, g string, fk double, score double, sz bigint"
+    )
+
+    def norm(x):
+        return "nan" if isinstance(x, float) and math.isnan(x) else x
+
+    expect = {r[0]: (r[1], norm(r[2]), norm(r[3])) for r in rows}
+    for key in ("g", "fk"):
+        out = pack_sequences(df, key, size_col="sz", order_col="doc_id", capacity=100)
+        assert out.columns == df.columns + ["bin_id"]
+        got = {
+            r["doc_id"]: (r["g"], norm(r["fk"]), norm(r["score"]))
+            for r in out.collect()
+        }
+        assert got == expect, key
+
+
 def test_chunk_documents_vs_python_reference(spark):
     """Overlapping token windows: window i covers [i*stride, i*stride+max);
     last window short; empty docs vanish; overlap bounds validated."""

@@ -11,7 +11,13 @@ import math
 import numpy as np
 import pytest
 
-from dask_groupby_spark import AGGREGATIONS, groupby_reduce
+from dask_groupby_spark import (
+    AGGREGATIONS,
+    groupby_agg,
+    groupby_reduce,
+    groupby_reduce_complex,
+    groupby_scan,
+)
 
 SEED = 12345
 N = 60
@@ -231,6 +237,69 @@ def test_nan_labels_excluded(sdf, data):
         sel = (label_nan == k) if k is not None else None
         exp = np_group_oracle("count", vals, label_nan == k)
         assert eq(got[k], exp)
+
+
+NAN = float("nan")
+
+
+@pytest.fixture(scope="module")
+def fkey(spark):
+    """A DOUBLE key holding both NaN (i % 10 == 3) and NULL (i % 10 == 7).
+    Values are quarter-integers (some NaN), so every sum is exact in any
+    order."""
+    rows = []
+    for i in range(N):
+        k = None if i % 10 == 7 else (NAN if i % 10 == 3 else float(i % 4))
+        v = NAN if i % 11 == 0 else (i % 5) * 0.25
+        rows.append((i, k, v, (v, 0.5 * (i % 3))))
+    return spark.createDataFrame(
+        rows, "idx bigint, k double, val double, z struct<re: double, im: double>"
+    )
+
+
+_LABEL_FRONT_ENDS = {
+    "reduce": lambda df: groupby_reduce(df, "k", func="nansum", value="val"),
+    "agg": lambda df: groupby_agg(
+        df, "k", funcs=[("nansum", "val", "s"), ("count", "val", "n")]
+    ),
+    "complex": lambda df: groupby_reduce_complex(df, "k", func="nansum", value="z"),
+    "scan": lambda df: groupby_scan(
+        df, "k", func="nancumsum", value="val", idx_col="idx"
+    ),
+}
+
+
+def _nan_safe(x):
+    """Row → comparable tuple: NaN becomes a token (NaN != NaN)."""
+    if isinstance(x, (tuple, list)):
+        return tuple(_nan_safe(e) for e in x)
+    return "nan" if isinstance(x, float) and math.isnan(x) else x
+
+
+@pytest.mark.parametrize("front", sorted(_LABEL_FRONT_ENDS))
+def test_float_key_nan_and_null_labels_excluded(fkey, front):
+    """NaN and NULL float labels are both missing (ref core.py:846-849):
+    reductions return no group row for either and match the same data
+    with those rows removed; a scan returns NA on exactly those rows and
+    leaves the others unchanged."""
+    from pyspark.sql import functions as F
+
+    run = _LABEL_FRONT_ENDS[front]
+    missing = F.col("k").isNull() | F.isnan("k")
+    got = run(fkey).collect()
+    ref = run(fkey.where(~missing)).collect()
+    if front != "scan":
+        assert all(r["k"] is not None and not math.isnan(r["k"]) for r in got)
+        assert sorted(map(_nan_safe, got)) == sorted(map(_nan_safe, ref))
+        return
+    miss = {r["idx"] for r in fkey.where(missing).select("idx").collect()}
+    assert len(miss) == 12
+    ref = {r["idx"]: _nan_safe(r) for r in ref}
+    for r in got:
+        if r["idx"] in miss:
+            assert math.isnan(r["nancumsum"])
+        else:
+            assert _nan_safe(r) == ref[r["idx"]]
 
 
 def test_multi_by_grid(sdf, data):
